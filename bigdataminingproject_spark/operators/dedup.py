@@ -413,7 +413,7 @@ def _cc_flatten(edges_df: DataFrame, max_rounds: int) -> DataFrame:
     port was measured WORSE (~35 s: every Python shuffle stage carries
     ~0.3 s of worker/pickle fixed cost). This version instead makes a
     round = ONE lazily-composed DataFrame plan — relax, star-minimum
-    pull-back, and a FIXED batch of 3 pointer jumps, all fused by
+    pull-back, and a FIXED batch of 2 pointer jumps, all fused by
     Catalyst into a single job at the round's eager localCheckpoint —
     plus one cheap convergence probe over the two checkpointed label
     frames: exactly 2 jobs per round, ~2x fewer rounds than one jump
@@ -429,7 +429,7 @@ def _cc_flatten(edges_df: DataFrame, max_rounds: int) -> DataFrame:
     reachable node, the same fixpoint as round 10's loop and the
     DuckDB oracle's recursive closure. Stats stay finite: the per-jump
     3x sizeInBytes inflation localCheckpoint carries forward is reset
-    by a single RDD rebuild every 6 rounds (vs every jump before),
+    by a single RDD rebuild every 4 rounds (vs every jump before),
     far below the ~3^18 BigInt pathology round 8 measured.
     """
     labels = (

@@ -43,21 +43,36 @@ def estimate_batch(
     """Point/batch frequency query (A9, frequency_detector.py:89-93).
 
     Terms are lowercased at query time like the reference; unseen terms
-    report 0 via a broadcast left join from the query-terms side.
+    report 0. Query lists are short, so each term is one conditional
+    count in a single global aggregate (partial counts per partition,
+    one tiny exchange), unpacked into (term, estimate) rows in term
+    order: two Spark jobs, where a broadcast join against a term
+    relation plus a final sort ran five.
     """
-    spark = df.sparkSession
-    want = spark.createDataFrame(
-        [(t.lower(),) for t in terms], "term string"
-    )
-    counts = token_counts(df, text_col)
-    return (
-        F.broadcast(want)
-        .join(counts, want.term == counts.token, "left")
-        .select(
-            "term",
-            F.coalesce(F.col("token_count"), F.lit(0)).alias("estimate"),
+    low = sorted(t.lower() for t in terms)
+    if not low:
+        return df.sparkSession.createDataFrame(
+            [], "term string, estimate long"
         )
-        .orderBy("term")
+    toks = remove_stopwords(tokenize(F.col(text_col)))
+    counts = df.select(F.explode(toks).alias("token")).agg(
+        *[
+            F.count(F.when(F.col("token") == F.lit(t), 1)).alias(f"c{i}")
+            for i, t in enumerate(low)
+        ]
+    )
+    return counts.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("term"),
+                        F.col(f"c{i}").alias("estimate"),
+                    )
+                    for i, t in enumerate(low)
+                ]
+            )
+        )
     )
 
 

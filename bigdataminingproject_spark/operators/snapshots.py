@@ -33,14 +33,17 @@ BURST_THRESHOLD = 2.0
 BURST_MIN_COUNT = 1
 
 
-def _ordered(
+def with_snapshot_position(
     docs: DataFrame, order_col: str, interval: int = UPDATE_INTERVAL
 ) -> DataFrame:
-    """Attach the stream position (1-based) and snapshot bucket.
+    """Attach the stream position ``rn`` (1-based, dense) and the snapshot
+    ``bucket`` — the ordered relation every ``*_from_ordered`` core reads.
 
     Uses the distributed two-phase global position (plans/ordering.py)
     rather than a bare ORDER BY window — a single-partition global sort
-    would not survive 100x data.
+    would not survive 100x data. The position costs an eager quantile
+    job plus a window and an offset join, so a caller running several
+    cores over one stream numbers it once and persists the result.
     """
     from bigdataminingproject_spark.plans.ordering import with_global_position
 
@@ -61,26 +64,24 @@ def snapshot_summary(
     scores = duplicate_scores(docs, order_col, text_col).select(
         F.col("doc_id").alias(order_col), "is_duplicate"
     )
+    flagged = docs.join(scores, order_col)
     return snapshot_summary_from_flags(
-        docs.join(scores, order_col), order_col, text_col, interval
+        with_snapshot_position(flagged, order_col, interval), text_col
     )
 
 
 def snapshot_summary_from_flags(
-    flagged: DataFrame,
-    order_col: str = "doc_id",
-    text_col: str = "text",
-    interval: int = UPDATE_INTERVAL,
+    ordered: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """Snapshot counters from documents that already carry an
-    ``is_duplicate`` flag — shared by the batch scorer (above) and the
-    Structured Streaming stateful scorer (streaming/pipeline.py), so
-    both surfaces produce the summary through one code path."""
-    ordered = _ordered(flagged, order_col, interval)
-    base = ordered
+    """Snapshot counters from an ordered relation (``rn``, ``bucket``,
+    see :func:`with_snapshot_position`) whose rows already carry an
+    ``is_duplicate`` flag — shared by the batch scorer (above), the
+    batch pipeline and the Structured Streaming stateful scorer
+    (streaming/pipeline.py), so every surface produces the summary
+    through one code path."""
     toks = remove_stopwords(tokenize(F.col(text_col)))
     per_bucket = (
-        base.select(
+        ordered.select(
             "bucket",
             "rn",
             F.col("is_duplicate").cast("int").alias("is_dup"),
@@ -129,7 +130,16 @@ def topk_cumulative_tokens(
     top-k (frequency_detector.py:44-87): at snapshot s, rank tokens by
     their exact count over all messages in buckets <= s.
     """
-    ordered = _ordered(docs, order_col, interval)
+    return topk_cumulative_from_ordered(
+        with_snapshot_position(docs, order_col, interval), k, text_col
+    )
+
+
+def topk_cumulative_from_ordered(
+    ordered: DataFrame, k: int = 10, text_col: str = "text"
+) -> DataFrame:
+    """:func:`topk_cumulative_tokens` over an already-ordered relation.
+    The last snapshot's ranking is the whole stream's top-k."""
     toks = remove_stopwords(tokenize(F.col(text_col)))
     counts = (
         ordered.select("bucket", F.explode(toks).alias("token"))
@@ -178,7 +188,25 @@ def burst_windows(
     recent >= min_count and (recent+eps)/(prev+eps) >= threshold; order by
     (-ratio, -recent).
     """
-    ordered = _ordered(docs, order_col, interval)
+    return burst_windows_from_ordered(
+        with_snapshot_position(docs, order_col, interval),
+        text_col,
+        recent_k,
+        prev_k,
+        threshold,
+        min_count,
+    )
+
+
+def burst_windows_from_ordered(
+    ordered: DataFrame,
+    text_col: str = "text",
+    recent_k: int = BURST_WINDOW // 2,
+    prev_k: int = BURST_WINDOW // 2,
+    threshold: float = BURST_THRESHOLD,
+    min_count: int = BURST_MIN_COUNT,
+) -> DataFrame:
+    """:func:`burst_windows` over an already-ordered relation."""
     toks = remove_stopwords(tokenize(F.col(text_col)))
     tok = ordered.select("rn", F.explode(toks).alias("token"))
     boundaries = (

@@ -500,6 +500,7 @@ def q_stream_snapshots(spark, sf_dir: str) -> DataFrame:
     from bigdataminingproject_spark.operators.dedup import DUP_THRESHOLD
     from bigdataminingproject_spark.operators.snapshots import (
         snapshot_summary_from_flags,
+        with_snapshot_position,
     )
     from bigdataminingproject_spark.sources.tables import load_table
     from bigdataminingproject_spark.streaming.replay import file_replay_source
@@ -534,7 +535,7 @@ def q_stream_snapshots(spark, sf_dir: str) -> DataFrame:
         .select("msg_id", "body", "is_duplicate")
     )
     return snapshot_summary_from_flags(
-        flagged, order_col="msg_id", text_col="body"
+        with_snapshot_position(flagged, "msg_id"), text_col="body"
     )
 
 
@@ -600,19 +601,24 @@ def run_streaming_detector_pipeline(
     ).first()
     processed = totals["processed"]
     dup_count = int(totals["dups"] or 0)
-    snap_src = scored.select(
-        F.col("msg_id").alias("doc_id"), F.col("body").alias("text")
-    )
-    snapshot_rows = snap_ops.snapshot_summary(
-        snap_src, interval=update_interval
+    # the snapshot counters read the STREAMED flags, never a batch
+    # re-score; one ordered relation feeds snapshots and burst
+    ordered = snap_ops.with_snapshot_position(
+        scored, "msg_id", update_interval
+    ).persist()
+    snapshot_rows = snap_ops.snapshot_summary_from_flags(
+        ordered, text_col="body"
     ).collect()
-    burst_rows = snap_ops.burst_windows(
-        snap_src, interval=update_interval
+    burst_rows = snap_ops.burst_windows_from_ordered(
+        ordered, text_col="body"
     ).collect()
     final_top = {
         r["token"]: r["token_count"]
-        for r in top_k_tokens(snap_src, k=top_frequency).collect()
+        for r in top_k_tokens(
+            scored, k=top_frequency, text_col="body"
+        ).collect()
     }
+    ordered.unpersist()
     scored.unpersist()
     return {
         "processed": processed,

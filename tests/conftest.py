@@ -85,3 +85,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def rebind(monkeypatch):
+    """``rebind(module, name, make)`` replaces ``module.name`` with
+    ``make(original)`` at every package binding — the defining module and
+    each ``from module import name`` copy — for the current test only."""
+    import importlib
+
+    def _rebind(module: str, name: str, make):
+        original = getattr(importlib.import_module(module), name)
+        replacement = make(original)
+        for mname, mod in list(sys.modules.items()):
+            if mod is None or not mname.startswith(
+                "bigdataminingproject_spark"
+            ):
+                continue
+            for attr, val in list(vars(mod).items()):
+                if val is original:
+                    monkeypatch.setattr(mod, attr, replacement)
+        return replacement
+
+    return _rebind

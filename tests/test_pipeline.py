@@ -80,3 +80,48 @@ def test_final_top_tokens(spark, stream):
     top = summary["final_top_tokens"]
     assert top["calm"] == 100
     assert top["burstword"] == 25
+
+
+def test_stream_scored_and_ordered_once(spark, stream, rebind):
+    """One run scores duplicates once and numbers the analyzed stream
+    once; totals and every snapshot operator share those relations.
+    Under exclusion the kept messages (0-based positions 0, 100 and
+    175) are renumbered densely to snapshot positions 1, 2 and 3."""
+    calls = {"duplicate_scores": 0, "with_global_position": 0}
+
+    def counting(original):
+        def counted(*args, **kwargs):
+            calls[original.__name__] += 1
+            return original(*args, **kwargs)
+
+        return counted
+
+    rebind(
+        "bigdataminingproject_spark.operators.dedup",
+        "duplicate_scores",
+        counting,
+    )
+    rebind(
+        "bigdataminingproject_spark.plans.ordering",
+        "with_global_position",
+        counting,
+    )
+    zero_based = stream.selectExpr("stream_pos - 1 AS stream_pos", "body")
+    summary = run_detector_pipeline(
+        zero_based,
+        update_interval=2,
+        freq_queries=["calm", "filler"],
+        exclude_duplicates=True,
+    )
+    assert calls == {"duplicate_scores": 1, "with_global_position": 1}
+    assert summary["processed"] == 3
+    assert summary["excluded_duplicates"] == 197
+    assert summary["duplicates"]["total"] == 0
+    snaps = summary["periodic_snapshots"]
+    assert [s["message_count"] for s in snaps] == [2, 3]
+    assert [s["duplicates_so_far"] for s in snaps] == [0, 0]
+    assert snaps[0]["top_10_tokens"]["calm"] == 1
+    assert snaps[1]["top_10_tokens"]["calm"] == 2
+    assert snaps[1]["top_10_tokens"]["burstword"] == 1
+    assert summary["final_top_tokens"] == snaps[1]["top_10_tokens"]
+    assert summary["frequency_estimates"] == {"calm": 2, "filler": 1}

@@ -169,6 +169,45 @@ def test_streaming_pipeline_equals_batch_pipeline(spark, tmp_path):
     assert live_snaps == batch_snaps
 
 
+def test_streaming_pipeline_snapshots_use_streamed_flags(
+    spark, tmp_path, rebind
+):
+    """The twin's ``duplicates_so_far`` comes from the stateful streamed
+    flags: with the batch scorer disabled it still counts every
+    duplicate."""
+    from bigdataminingproject_spark.streaming.pipeline import (
+        run_streaming_detector_pipeline,
+    )
+
+    def refuse(original):
+        def raising(*args, **kwargs):
+            raise AssertionError("streaming twin called the batch scorer")
+
+        return raising
+
+    rebind(
+        "bigdataminingproject_spark.operators.dedup",
+        "duplicate_scores",
+        refuse,
+    )
+    # 60 exact repeats (59 duplicates), then 60 one-shingle repeats whose
+    # 46th message adds a fresh shingle (score 0.5, kept): 59 + 58 = 117
+    rows = [(pos, "repeated filler body text") for pos in range(1, 61)]
+    rows += [
+        (60 + i, "different second phase" + (" hotword" if i >= 46 else ""))
+        for i in range(1, 61)
+    ]
+    src = spark.createDataFrame(rows, "stream_pos long, body string")
+    live = run_streaming_detector_pipeline(
+        spark, src, str(tmp_path / "flags_stage"), chunks=3, update_interval=50
+    )
+    assert live["duplicates"]["total"] == 117
+    assert [
+        (s["message_count"], s["duplicates_so_far"])
+        for s in live["periodic_snapshots"]
+    ] == [(50, 49), (100, 98), (120, 117)]
+
+
 def test_streaming_token_counts_match_batch(spark, tmp_path):
     from bigdataminingproject_spark.functions.text import (
         remove_stopwords,

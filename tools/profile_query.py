@@ -5,9 +5,9 @@ run), then N timed executions at the target SF with
 ``setJobDescription`` labels, reporting min/median wall seconds and the
 Spark job count per execution (job-count inflation is the cheap proxy
 for per-batch/foreachBatch fixed costs).  ``--explain`` additionally
-writes ``plans/r10/<query>_<tag>.txt`` with ``explain("formatted")`` of
-the returned DataFrame (the final batch plan; streaming twins' inner
-micro-batch plans are not captured here).
+writes ``plans/r11/<query>_<tag>.txt`` under the repo root with
+``explain("formatted")`` of the returned DataFrame (the final batch
+plan; streaming twins' inner micro-batch plans are not captured here).
 
 Usage:
     python tools/profile_query.py [--sf DIR] [--runs N] [--explain TAG] q1 q2 ...
@@ -20,7 +20,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS_DIR = os.path.join(REPO_ROOT, "plans", "r11")
+sys.path.insert(0, REPO_ROOT)
 
 
 def main() -> int:
@@ -74,7 +76,7 @@ def main() -> int:
             jobs_per_run.append(j1 - j0)
             spark.sparkContext.setJobDescription(None)
         if explain_tag:
-            os.makedirs("/root/repo/plans/r11", exist_ok=True)
+            os.makedirs(PLANS_DIR, exist_ok=True)
             try:
                 txt = fn(spark, sf_dir)._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -82,7 +84,7 @@ def main() -> int:
                     )
                 )
                 with open(
-                    f"/root/repo/plans/r11/{name}_{explain_tag}.txt", "w"
+                    os.path.join(PLANS_DIR, f"{name}_{explain_tag}.txt"), "w"
                 ) as fh:
                     fh.write(txt)
             except Exception as exc:
