@@ -26,10 +26,6 @@ except Exception:  # pragma: no cover
     _HAVE_NLTK = False
 
 
-def have_nltk() -> bool:
-    return _HAVE_NLTK
-
-
 @F.pandas_udf(ArrayType(StringType()))
 def lemmatize_udf(tokens: pd.Series) -> pd.Series:
     """WordNet noun lemmatization per token (T3).

@@ -116,8 +116,3 @@ def preprocess_body(
     """
     toks = remove_stopwords(tokenize(col), stopwords, use_skipwords)
     return F.array_join(toks, " ")
-
-
-def stopword_sql_list(stopwords: tuple[str, ...] = ENGLISH_STOPWORDS) -> str:
-    """The stopword set as a SQL IN-list literal, for oracle parity."""
-    return ", ".join(f"'{w}'" for w in sorted(set(stopwords) | set(SKIPWORDS)))

@@ -32,13 +32,16 @@ Determinism contract (what makes a DuckDB oracle possible):
   level) — unique by construction — and reports the upper edge of the
   first node whose cumulative mass reaches ``q * n``.
 
-Scale shape: one shuffle to build the leaf counters (bounded at 2^16
-rows regardless of n), then QD_BITS rounds of sibling aggregation over
-a relation that SHRINKS every round — the whole sweep touches at most
-2^17 rows total after the first aggregate. The streaming twin folds
-the leaf counters (exactly additive, domain-bounded state) and runs
-the identical sweep at publish time, so k micro-batch folds land
-bit-exactly on the batch digest.
+Scale shape: one shuffle builds the leaf counters (bounded at 2^16
+rows regardless of n); the QD_BITS-level sweep then runs as ONE
+grouped-map task over them (numpy; at most 2^17 rows over all levels),
+with ``n`` and ``tau`` derived inside that task. At this size per-level
+Spark rounds buy nothing but per-job overhead. The traversal reads
+``n`` and the node count off the digest in the same plan, so a batch
+query runs no eager action. The streaming twin folds the leaf counters
+(exactly additive, domain-bounded state) and runs the identical sweep
+at publish time, so k micro-batch folds land bit-exactly on the batch
+digest.
 
 No reference counterpart (the reference has no quantile operator at
 all); family parity note at operators/sketches.py.
@@ -46,6 +49,8 @@ all); family parity note at operators/sketches.py.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -85,98 +90,99 @@ def fold_leaf_partials(parts: DataFrame) -> DataFrame:
     return parts.groupBy("idx").agg(F.sum("c").alias("c"))
 
 
-def qdigest_from_leaves(leaves: DataFrame, tau: int) -> DataFrame:
-    """The bottom-up compression sweep: QD_BITS rounds of sibling
-    aggregation over a shrinking relation.
+def qdigest_from_leaves(leaves: DataFrame) -> DataFrame:
+    """The bottom-up compression sweep, as one grouped-map task over
+    the whole (<= 2^16-row) leaf relation.
 
-    Per level: siblings whose pending subtree mass ``s`` is still
+    ``tau = max(1, n // QD_K)`` with ``n = sum(c)``. Per level: siblings
+    (rows sharing ``idx >> 1``) whose summed subtree mass ``s`` is still
     < ``tau`` merge into their parent and keep climbing; the moment a
     parent subtree reaches ``tau`` its children freeze into the digest
     at their current level. Whatever survives to the root is emitted
-    at level QD_BITS. Returns (level, idx, c) digest nodes.
+    at level QD_BITS. Returns (level, idx, c) digest nodes; empty
+    leaves give an empty digest.
     """
-    r = leaves.select("idx", "c")
-    emitted: list[DataFrame] = []
-    for lvl in range(QD_BITS):
-        p = F.shiftright(F.col("idx"), 1)
-        w = Window.partitionBy(p)
-        r = r.withColumn("s", F.sum("c").over(w))
-        emitted.append(
-            r.filter(F.col("s") >= F.lit(tau)).select(
-                F.lit(lvl).alias("level"), "idx", "c"
+
+    # nested, so the worker gets it by value and needs no package import
+    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
+        order = np.argsort(pdf["idx"].to_numpy(), kind="stable")
+        idx = pdf["idx"].to_numpy(np.int64)[order]
+        c = pdf["c"].to_numpy(np.int64)[order]
+        tau = max(1, int(c.sum()) // QD_K)
+        nodes = []
+        for lvl in range(QD_BITS):
+            up, first, parent = np.unique(
+                idx >> 1, return_index=True, return_inverse=True
             )
-        )
-        r = (
-            r.filter(F.col("s") < F.lit(tau))
-            .select(p.alias("idx"), F.col("s").alias("c"))
-            .distinct()
-        )
-        if lvl == 7:  # cut the 16-round lineage once, mid-sweep
-            r = r.localCheckpoint(eager=True)
-    emitted.append(
-        r.select(F.lit(QD_BITS).alias("level"), "idx", "c")
+            s = np.add.reduceat(c, first)  # idx sorted: siblings adjacent
+            hot = s[parent] >= tau
+            nodes.append(
+                pd.DataFrame({"level": lvl, "idx": idx[hot], "c": c[hot]})
+            )
+            idx, c = up[s < tau], s[s < tau]
+        nodes.append(pd.DataFrame({"level": QD_BITS, "idx": idx, "c": c}))
+        return pd.concat(nodes)
+
+    return (
+        leaves.select("idx", "c")
+        .groupBy(F.lit(0).alias("_g"))
+        .applyInPandas(sweep, schema="level int, idx bigint, c bigint")
     )
-    out = emitted[0]
-    for e in emitted[1:]:
-        out = out.unionByName(e)
-    return out
 
 
 def qdigest_quantiles(
     spark: SparkSession,
     digest: DataFrame,
-    n: int,
     qs: tuple[float, ...] = QD_QS,
 ) -> DataFrame:
     """Quantile answers from a digest: order nodes by (leaf upper
     bound, level), cumulative-sum the mass, and report the upper edge
-    of the first node reaching ``q * n``. The digest is O(k log U)
-    rows, so the single-partition window is bounded."""
+    of the first node reaching ``q * n``. ``n`` (the digest's total
+    mass) and the node count come from the same single-partition
+    window, which the O(k log U)-row digest keeps bounded. An empty
+    digest gives an empty answer."""
     ub = (
         (F.col("idx") + F.lit(1))
         * F.expr("shiftleft(CAST(1 AS BIGINT), level)")
         - F.lit(1)
     ).alias("ub")
     w = Window.orderBy("ub", "level")
-    ranked = digest.select("level", "idx", "c", ub).withColumn(
-        "cum", F.sum("c").over(w)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = digest.select("level", "idx", "c", ub).select(
+        "ub",
+        F.sum("c").over(w).alias("cum"),
+        F.sum("c").over(whole).alias("n_events"),
+        F.count(F.lit(1)).over(whole).alias("digest_nodes"),
     )
-    n_nodes = digest.count()
     qdf = spark.createDataFrame([(float(q),) for q in qs], "quantile double")
     hits = (
         F.broadcast(qdf)
-        .join(ranked, F.col("cum") >= F.col("quantile") * F.lit(float(n)))
-        .groupBy("quantile")
+        .join(
+            ranked,
+            F.col("cum")
+            >= F.col("quantile") * F.col("n_events").cast("double"),
+        )
+        .groupBy("quantile", "digest_nodes", "n_events")
         .agg(F.min("ub").alias("ub"))
     )
     return hits.select(
         "quantile",
         F.round((F.col("ub") + F.lit(1)) * F.lit(QD_INV), 6).alias("estimate"),
-        F.lit(n_nodes).alias("digest_nodes"),
-        F.lit(n).alias("n_events"),
+        "digest_nodes",
+        "n_events",
     ).orderBy("quantile")
 
 
 def q_events_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p25..p99 of the event value column via the q-digest sketch:
-    quantize -> bounded leaf counters -> compression sweep -> bounded
-    traversal. The only scalars on the driver are n and tau."""
+    quantize -> bounded leaf counters -> one-task compression sweep ->
+    bounded traversal. One lazy plan that collects no scalar first; an
+    event table with no values gives an empty answer."""
     from bigdataminingproject_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    leaves = quantize_leaves(ev, "value")
-    n = int(
-        leaves.agg(F.sum("c").alias("n")).collect()[0]["n"] or 0
-    )
-    if n == 0:
-        return spark.createDataFrame(
-            [],
-            "quantile double, estimate double, digest_nodes bigint, "
-            "n_events bigint",
-        )
-    tau = max(1, n // QD_K)
-    digest = qdigest_from_leaves(leaves, tau)
-    return qdigest_quantiles(spark, digest, n, QD_QS)
+    digest = qdigest_from_leaves(quantize_leaves(ev, "value"))
+    return qdigest_quantiles(spark, digest, QD_QS)
 
 
 def qdigest_oracle_sql(qs: tuple[float, ...] = QD_QS) -> str:
@@ -284,16 +290,8 @@ def q_events_range_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdataminingproject_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    leaves = quantize_leaves(ev, "value").localCheckpoint(eager=True)
-    n = int(leaves.agg(F.sum("c").alias("n")).collect()[0]["n"] or 0)
-    if n == 0:
-        return spark.createDataFrame(
-            [],
-            "range_lo double, range_hi double, est_rows bigint, "
-            "exact_rows bigint, err_pct double",
-        )
-    tau = max(1, n // QD_K)
-    digest = qdigest_from_leaves(leaves, tau)
+    leaves = quantize_leaves(ev, "value")
+    digest = qdigest_from_leaves(leaves)
     ub = (
         (F.col("idx") + F.lit(1))
         * F.expr("shiftleft(CAST(1 AS BIGINT), level)")

@@ -126,15 +126,3 @@ def unsafe_single_partition_exchanges(df: DataFrame) -> list[int]:
         if has_scan and not has_agg:
             offenders.append(nid)
     return offenders
-
-
-def plan_report(df: DataFrame) -> dict:
-    """One-call summary used by tests and tuning sessions."""
-    return {
-        "pushed_filters": pushed_filters(df),
-        "read_schemas": read_schemas(df),
-        "broadcast_joins": broadcast_join_count(df),
-        "shuffles": shuffle_exchange_count(df),
-        "whole_stage_codegen": has_whole_stage_codegen(df),
-        "take_ordered": uses_take_ordered(df),
-    }

@@ -1,4 +1,4 @@
-"""Conversation-corpus ETL (reference S1-S5, F1-F4, P1-P3).
+"""Conversation-corpus ETL (reference S1-S5, F1-F4, P1-P2).
 
 The reference walks directories of one-conversation-per-file JSON, filters
 and NLP-preprocesses message bodies in row-at-a-time Python, and pickles
@@ -23,7 +23,7 @@ False, the full English stopword list — either/or, not a union.
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -270,29 +270,3 @@ def load_or_build_messages(
     )
     msgs.write.mode("overwrite").partitionBy("split").parquet(cache_path)
     return spark.read.parquet(cache_path)
-
-
-# --- Dataset registry (P3) ---------------------------------------------------
-
-@dataclass
-class DatasetRegistry:
-    """Multi-dataset registry (data_loader/dataloader.py:10-45): named
-    loaders producing messages DataFrames, materialized on demand."""
-
-    datasets: dict[str, DataFrame] = field(default_factory=dict)
-
-    def register(self, name: str, messages: DataFrame) -> None:
-        self.datasets[name] = messages
-
-    def get_dataset_splits(self, name: str) -> dict[str, DataFrame]:
-        df = self.datasets[name]
-        splits = [r["split"] for r in df.select("split").distinct().collect()]
-        return {s: df.filter(F.col("split") == s) for s in splits}
-
-    def union_all(self) -> DataFrame:
-        """All datasets as one relation with their `dataset` tag."""
-        dfs = list(self.datasets.values())
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out

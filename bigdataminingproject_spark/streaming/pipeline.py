@@ -2678,17 +2678,17 @@ def q_stream_qdigest_maintenance(spark, sf_dir: str) -> DataFrame:
     to an :class:`AppendOnlyPartsStore` whose ``merge_transform`` sums
     counts per leaf (``qdigest.fold_leaf_partials``) — exact by counter
     additivity, so every LSM level stays <= 2^16 rows regardless of how
-    many batches or events fed it. Publish folds the live tail, runs
-    the identical compression sweep and traversal as the batch operator
-    (``qdigest_from_leaves`` / ``qdigest_quantiles``), so k micro-batch
-    folds land bit-exactly on the batch digest. Output and oracle are
-    ``q_events_qdigest``'s.
+    many batches or events fed it. Publish is one plan: fold the live
+    tail, run the batch operator's one-task compression sweep and its
+    traversal (``qdigest_from_leaves`` / ``qdigest_quantiles``, which
+    derive n and tau from the folded counters), and materialize the
+    answer once, so k micro-batch folds land bit-exactly on the batch
+    digest. Output and oracle are ``q_events_qdigest``'s.
     """
     import shutil
     import tempfile
 
     from bigdataminingproject_spark.operators.qdigest import (
-        QD_K,
         QD_QS,
         fold_leaf_partials,
         qdigest_from_leaves,
@@ -2730,11 +2730,9 @@ def q_stream_qdigest_maintenance(spark, sf_dir: str) -> DataFrame:
                 "quantile double, estimate double, digest_nodes bigint, "
                 "n_events bigint",
             )
-        leaves = fold_leaf_partials(state).localCheckpoint(eager=True)
-        n = int(leaves.agg(F.sum("c").alias("n")).collect()[0]["n"] or 0)
-        tau = max(1, n // QD_K)
-        digest = qdigest_from_leaves(leaves, tau)
-        return qdigest_quantiles(spark, digest, n, QD_QS).localCheckpoint(
+        digest = qdigest_from_leaves(fold_leaf_partials(state))
+        # materialized before the finally drops the state it reads
+        return qdigest_quantiles(spark, digest, QD_QS).localCheckpoint(
             eager=True
         )
     finally:

@@ -1,7 +1,8 @@
-"""Q-digest mergeable quantile sketch: mass conservation, the classic
-rank-error bound against exact quantiles, fold closure of the leaf
-counters (the LSM merge_transform contract), compression, clamping,
-and determinism.
+"""Q-digest mergeable quantile sketch: the one-task sweep against a
+plain-Python level loop, mass conservation, the classic rank-error
+bound against exact quantiles, fold closure of the leaf counters (the
+LSM merge_transform contract), compression, clamping, determinism,
+empty input, and twin == batch.
 
 No reference counterpart (north-star sketch family beyond the
 reference's bloom/CMS/DGIM surface, operators/sketches.py parity
@@ -37,13 +38,63 @@ def ev(spark):
 
 @pytest.fixture(scope="module")
 def built(spark, ev):
-    """One sweep shared by the assertions (the sweep is 16 chained
-    aggregations — build it once)."""
+    """One sweep shared by the assertions."""
     leaves = quantize_leaves(ev, "value").localCheckpoint(eager=True)
     n = leaves.agg(F.sum("c")).collect()[0][0]
     tau = max(1, n // QD_K)
-    digest = qdigest_from_leaves(leaves, tau).localCheckpoint(eager=True)
+    digest = qdigest_from_leaves(leaves).localCheckpoint(eager=True)
     return leaves, int(n), tau, digest
+
+
+def _reference_digest(leaves):
+    """The level loop in plain Python: per level, sibling sums over
+    ``idx >> 1``; rows whose sum reaches tau freeze, the rest climb as
+    their parents; the survivors are the level-QD_BITS remainder."""
+    tau = max(1, sum(c for _, c in leaves) // QD_K)
+    rows, out = list(leaves), []
+    for lvl in range(QD_BITS):
+        s = {}
+        for i, c in rows:
+            s[i >> 1] = s.get(i >> 1, 0) + c
+        out += [(lvl, i, c) for i, c in rows if s[i >> 1] >= tau]
+        rows = [(p, c) for p, c in s.items() if c < tau]
+    return sorted(out + [(QD_BITS, i, c) for i, c in rows])
+
+
+def _random_leaves():
+    import random
+
+    rnd = random.Random(11)
+    idx = rnd.sample(range(QD_LEAVES), 3000)
+    return [(i, rnd.choice([1, 1, 2, 3, 40, 900])) for i in idx]
+
+
+_TAU_ONE = [(0, 1), (1, 3), (7, 2), (40000, 5), (QD_LEAVES - 1, 1)]
+
+
+@pytest.mark.parametrize(
+    "leaves, want",
+    [
+        # n < 2 * QD_K: tau == 1, so the digest is the leaves at level 0
+        (_TAU_ONE, [(0, i, c) for i, c in _TAU_ONE]),
+        # all mass in one leaf
+        ([(12345, 5 * QD_K)], [(0, 12345, 5 * QD_K)]),
+        # one heavy leaf freezes at once; the light ones (8 < tau = 50)
+        # never reach tau and climb to the level-QD_BITS root
+        (
+            [(100, 50 * QD_K), (3, 1), (9000, 2), (33000, 1), (65000, 4)],
+            [(0, 100, 50 * QD_K), (QD_BITS, 0, 8)],
+        ),
+        (_random_leaves(), None),
+    ],
+    ids=["tau_one", "one_leaf", "sparse_remainder", "random"],
+)
+def test_sweep_matches_reference_loop(spark, leaves, want):
+    df = spark.createDataFrame(leaves, "idx bigint, c bigint")
+    got = sorted(tuple(r) for r in qdigest_from_leaves(df).collect())
+    assert got == _reference_digest(leaves)
+    if want is not None:
+        assert got == sorted(want)
 
 
 def test_mass_conservation(built):
@@ -58,7 +109,7 @@ def test_rank_error_bound(spark, ev, built):
     level, so |rank(est) - q*n| <= 2 * tau * QD_BITS (+1 for the
     open/closed leaf edge)."""
     leaves, n, tau, digest = built
-    out = qdigest_quantiles(spark, digest, n, QD_QS).collect()
+    out = qdigest_quantiles(spark, digest, QD_QS).collect()
     assert [r["quantile"] for r in out] == sorted(QD_QS)
     leaf_rows = {r["idx"]: r["c"] for r in leaves.collect()}
     bound = 2 * tau * QD_BITS + 1
@@ -137,3 +188,32 @@ def test_range_selectivity_error_bound(spark):
     bound = 2 * (2 * tau * QD_BITS)
     for r in out:
         assert abs(r["est_rows"] - r["exact_rows"]) <= bound
+
+
+def test_empty_events_give_empty_answer(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    from bigdataminingproject_spark.operators.qdigest import q_events_qdigest
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    pq.write_table(events.slice(0, 0), str(tmp_path / "events.parquet"))
+    out = q_events_qdigest(spark, str(tmp_path))
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<quantile:double,estimate:double,digest_nodes:bigint,"
+        "n_events:bigint>"
+    )
+
+
+def test_streaming_twin_matches_batch(spark):
+    """The twin folds per-batch leaf partials before the same sweep, so
+    its answer equals the batch query's row for row."""
+    from bigdataminingproject_spark.operators.qdigest import q_events_qdigest
+    from bigdataminingproject_spark.streaming.pipeline import (
+        q_stream_qdigest_maintenance,
+    )
+
+    batch = q_events_qdigest(spark, SF_DIR).collect()
+    twin = q_stream_qdigest_maintenance(spark, SF_DIR).collect()
+    assert len(batch) == len(QD_QS)
+    assert [tuple(r) for r in twin] == [tuple(r) for r in batch]

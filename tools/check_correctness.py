@@ -21,7 +21,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bigdataminingproject_spark.session import get_spark  # noqa: E402
