@@ -52,7 +52,24 @@ def duplicate_scores(
     text_col: str = "text",
     threshold: float = DUP_THRESHOLD,
 ) -> DataFrame:
-    """Batch-exact reference duplicate scoring (A10).
+    """Batch-exact reference duplicate scoring (A10): one row
+    (doc_id, duplicate_score, is_duplicate) per document — see
+    :func:`with_duplicate_scores`."""
+    return with_duplicate_scores(docs, order_col, text_col, threshold).select(
+        F.col(order_col).alias("doc_id"), "duplicate_score", "is_duplicate"
+    )
+
+
+def with_duplicate_scores(
+    docs: DataFrame,
+    order_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = DUP_THRESHOLD,
+) -> DataFrame:
+    """``docs`` with its reference duplicate score and flag attached
+    (A10) — the per-document scores are left-joined onto ``docs`` once,
+    so a caller that needs the scored rows with their text gets them
+    without a second join.
 
     Semantics (duplicate_detector.py:44-61): stream documents in
     ``order_col`` order; a document's score is the fraction of its shingle
@@ -80,22 +97,15 @@ def duplicate_scores(
             "first_doc", F.min("doc_id").over(Window.partitionBy("shingle"))
         )
         .withColumn("hit", (F.col("first_doc") < F.col("doc_id")).cast("int"))
-        .groupBy("doc_id")
-        .agg(F.round(F.avg("hit"), 4).alias("duplicate_score"))
+        .groupBy(F.col("doc_id").alias(order_col))
+        .agg(F.round(F.avg("hit"), 4).alias("_score"))
     )
-    ids = docs.select(F.col(order_col).alias("doc_id"))
+    score = F.coalesce(F.col("_score"), F.lit(0.0))
     return (
-        ids.join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("duplicate_score"), F.lit(0.0)).alias(
-                "duplicate_score"
-            ),
-        )
-        .withColumn(
-            "is_duplicate",
-            (F.col("duplicate_score") >= F.lit(threshold)).cast("boolean"),
-        )
+        docs.join(scored, order_col, "left")
+        .withColumn("duplicate_score", score)
+        .withColumn("is_duplicate", score >= F.lit(threshold))
+        .drop("_score")
     )
 
 

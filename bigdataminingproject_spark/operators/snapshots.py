@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdataminingproject_spark.functions.text import remove_stopwords, tokenize
-from bigdataminingproject_spark.operators.dedup import duplicate_scores
+from bigdataminingproject_spark.operators.dedup import with_duplicate_scores
 from bigdataminingproject_spark.sources.tables import load_table
 
 UPDATE_INTERVAL = 100  # run_detectors.py:101-105
@@ -34,7 +34,10 @@ BURST_MIN_COUNT = 1
 
 
 def with_snapshot_position(
-    docs: DataFrame, order_col: str, interval: int = UPDATE_INTERVAL
+    docs: DataFrame,
+    order_col: str,
+    interval: int = UPDATE_INTERVAL,
+    dense_from: int | None = None,
 ) -> DataFrame:
     """Attach the stream position ``rn`` (1-based, dense) and the snapshot
     ``bucket`` — the ordered relation every ``*_from_ordered`` core reads.
@@ -44,10 +47,20 @@ def with_snapshot_position(
     would not survive 100x data. The position costs an eager quantile
     job plus a window and an offset join, so a caller running several
     cores over one stream numbers it once and persists the result.
+
+    ``dense_from``: the caller has established that ``order_col`` is
+    already dense, i.e. exactly the values ``dense_from`` ..
+    ``dense_from + count - 1``; the position is then the projection
+    ``rn = order_col - dense_from + 1`` and nothing is renumbered.
     """
     from bigdataminingproject_spark.plans.ordering import with_global_position
 
-    pos = with_global_position(docs, order_col, pos_col="rn")
+    if dense_from is None:
+        pos = with_global_position(docs, order_col, pos_col="rn")
+    else:
+        pos = docs.withColumn(
+            "rn", (F.col(order_col) - F.lit(dense_from) + 1).cast("long")
+        )
     return pos.withColumn(
         "bucket", F.floor((F.col("rn") - 1) / interval).cast("long")
     )
@@ -61,13 +74,10 @@ def snapshot_summary(
 ) -> DataFrame:
     """Per-snapshot counters: message_count, duplicates_so_far, period
     distinct tokens (A11/A12 over W5 tumbling count-windows)."""
-    scores = duplicate_scores(docs, order_col, text_col).select(
-        F.col("doc_id").alias(order_col), "is_duplicate"
-    )
-    flagged = docs.join(scores, order_col)
+    flagged = with_duplicate_scores(docs, order_col, text_col)
     return snapshot_summary_from_flags(
         with_snapshot_position(flagged, order_col, interval), text_col
-    )
+    ).orderBy("snapshot_id")
 
 
 def snapshot_summary_from_flags(
@@ -78,7 +88,8 @@ def snapshot_summary_from_flags(
     ``is_duplicate`` flag — shared by the batch scorer (above), the
     batch pipeline and the Structured Streaming stateful scorer
     (streaming/pipeline.py), so every surface produces the summary
-    through one code path."""
+    through one code path. Rows come back unordered; the registry entry
+    points sort by ``snapshot_id``."""
     toks = remove_stopwords(tokenize(F.col(text_col)))
     per_bucket = (
         ordered.select(
@@ -113,7 +124,6 @@ def snapshot_summary_from_flags(
             "duplicates_so_far",
             "distinct_tokens_in_period",
         )
-        .orderBy("snapshot_id")
     )
 
 
@@ -132,14 +142,15 @@ def topk_cumulative_tokens(
     """
     return topk_cumulative_from_ordered(
         with_snapshot_position(docs, order_col, interval), k, text_col
-    )
+    ).orderBy("snapshot_id", "rnk")
 
 
 def topk_cumulative_from_ordered(
     ordered: DataFrame, k: int = 10, text_col: str = "text"
 ) -> DataFrame:
-    """:func:`topk_cumulative_tokens` over an already-ordered relation.
-    The last snapshot's ranking is the whole stream's top-k."""
+    """:func:`topk_cumulative_tokens` over an already-ordered relation,
+    unordered (``rnk`` carries the rank). The last snapshot's ranking is
+    the whole stream's top-k."""
     toks = remove_stopwords(tokenize(F.col(text_col)))
     counts = (
         ordered.select("bucket", F.explode(toks).alias("token"))
@@ -163,7 +174,6 @@ def topk_cumulative_from_ordered(
         cum.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("snapshot_id", "token", "cum_count", "rnk")
-        .orderBy("snapshot_id", "rnk")
     )
 
 
@@ -195,7 +205,7 @@ def burst_windows(
         prev_k,
         threshold,
         min_count,
-    )
+    ).orderBy("boundary", F.desc("ratio"), F.desc("recent_count"), "token")
 
 
 def burst_windows_from_ordered(
@@ -206,7 +216,8 @@ def burst_windows_from_ordered(
     threshold: float = BURST_THRESHOLD,
     min_count: int = BURST_MIN_COUNT,
 ) -> DataFrame:
-    """:func:`burst_windows` over an already-ordered relation."""
+    """:func:`burst_windows` over an already-ordered relation, unordered;
+    :func:`burst_order` is the entry point's order for collected rows."""
     toks = remove_stopwords(tokenize(F.col(text_col)))
     tok = ordered.select("rn", F.explode(toks).alias("token"))
     boundaries = (
@@ -238,10 +249,13 @@ def burst_windows_from_ordered(
             "prev_count",
             F.round(ratio, 4).alias("ratio"),
         )
-        .orderBy(
-            "boundary", F.desc("ratio"), F.desc("recent_count"), "token"
-        )
     )
+
+
+def burst_order(row) -> tuple:
+    """Sort key of a collected burst row: boundary, then ratio and recent
+    count descending, then token — :func:`burst_windows`' order."""
+    return (row["boundary"], -row["ratio"], -row["recent_count"], row["token"])
 
 
 # --- query registry entries -------------------------------------------------

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdataminingproject_spark.operators import snapshots as snap_ops
-from bigdataminingproject_spark.operators.dedup import duplicate_scores
+from bigdataminingproject_spark.operators.dedup import with_duplicate_scores
 from bigdataminingproject_spark.operators.frequency import estimate_batch
 
 
@@ -36,8 +36,17 @@ def run_detector_pipeline(
     """Run the full duplicate/frequency/burst analysis over a bounded
     replay stream and return the reference-shaped summary dict.
 
-    ``stream`` must have columns (stream_pos long/int, body string) —
-    produced by ``sources.conversations.ordered_message_stream``.
+    ``stream`` must have columns (stream_pos long/int, body string) with
+    ``stream_pos`` unique — produced by
+    ``sources.conversations.ordered_message_stream``, whose bounded
+    replay is a top-N of at most ``--max-messages`` rows.
+
+    Dense fast path: the snapshot operators need positions 1..n over the
+    analyzed messages. In keep mode, when the totals aggregate shows that
+    ``stream_pos`` is already dense (count == max - min + 1, as
+    ``ordered_message_stream`` emits it), the position is the projection
+    ``stream_pos - min + 1``. Exclude mode, and a keep-mode stream with
+    gaps, renumber through ``with_snapshot_position``'s global position.
 
     DOCUMENTED DIVERGENCE (``exclude_duplicates=True``): the reference
     loop feeds every message's tokens to the CMS/top-k state BEFORE the
@@ -62,18 +71,16 @@ def run_detector_pipeline(
     # computed once and persisted, mirroring the reference's single pass
     # (run_detectors.py:140-215):
     #   stream  — the input plan (scan + ordering) is replayed by the
-    #             scorer's two branches and the flag join;
+    #             scorer's shingle branch and the score join;
     #   flagged — each message with its duplicate score and flag
-    #             (A10/A11), scored once;
-    #   ordered — the analyzed messages renumbered 1..n with their
-    #             snapshot bucket, one global-position pass feeding all
-    #             three snapshot operators.
+    #             (A10/A11), scored once and joined onto the stream once;
+    #   ordered — the analyzed messages numbered 1..n with their snapshot
+    #             bucket, feeding all three snapshot operators.
     stream = stream.select(
         F.col("stream_pos").cast("long").alias("stream_pos"), "body"
     ).persist()
-    scores = duplicate_scores(stream, order_col="stream_pos", text_col="body")
-    flagged = stream.join(
-        scores.withColumnRenamed("doc_id", "stream_pos"), "stream_pos"
+    flagged = with_duplicate_scores(
+        stream, order_col="stream_pos", text_col="body"
     ).persist()
 
     # F7 (run_detectors.py:166-194): with exclude_duplicates an excluded
@@ -89,25 +96,43 @@ def run_detector_pipeline(
         F.count(F.when(kept & is_dup, 1)).alias("dups"),
         F.sum(F.when(kept, F.col("duplicate_score"))).alias("score_sum"),
         F.count(F.when(is_dup, 1)).alias("flagged"),
+        F.min("stream_pos").alias("pos_min"),
+        F.max("stream_pos").alias("pos_max"),
     ).first()
     processed = totals["processed"]
     dup_count = totals["dups"]
     excluded = totals["flagged"] if exclude_duplicates else 0
 
     # Dense positions over the analyzed stream: under exclusion the kept
-    # messages are renumbered, so snapshots count kept messages only.
+    # messages are renumbered, so snapshots count kept messages only. A
+    # kept stream that is already dense is only shifted to start at 1.
+    dense = (
+        not exclude_duplicates
+        and processed > 0
+        and processed == totals["pos_max"] - totals["pos_min"] + 1
+    )
     ordered = snap_ops.with_snapshot_position(
-        flagged.filter(kept), "stream_pos", update_interval
+        flagged.filter(kept),
+        "stream_pos",
+        update_interval,
+        dense_from=totals["pos_min"] if dense else None,
     ).persist()
-    snapshot_rows = snap_ops.snapshot_summary_from_flags(
-        ordered, text_col="body"
-    ).collect()
-    topk_rows = snap_ops.topk_cumulative_from_ordered(
-        ordered, k=top_frequency, text_col="body"
-    ).collect()
-    burst_rows = snap_ops.burst_windows_from_ordered(
-        ordered, text_col="body"
-    ).collect()
+    # the cores return unordered rows; order them here, as the registry
+    # entry points do in Spark
+    snapshot_rows = sorted(
+        snap_ops.snapshot_summary_from_flags(ordered, text_col="body").collect(),
+        key=lambda r: r["snapshot_id"],
+    )
+    topk_rows = sorted(
+        snap_ops.topk_cumulative_from_ordered(
+            ordered, k=top_frequency, text_col="body"
+        ).collect(),
+        key=lambda r: (r["snapshot_id"], r["rnk"]),
+    )
+    burst_rows = sorted(
+        snap_ops.burst_windows_from_ordered(ordered, text_col="body").collect(),
+        key=snap_ops.burst_order,
+    )
 
     topk_by_snap: dict[int, dict[str, int]] = {}
     for r in topk_rows:

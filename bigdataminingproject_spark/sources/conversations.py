@@ -145,32 +145,42 @@ def ordered_message_stream(
     sort_by_time: bool = True,
 ) -> DataFrame:
     """S4 (run_detectors.py:14-34): global time order (missing time sorts
-    last), optional limit, body projection. Returns (stream_pos, body)."""
+    last), optional limit, body projection. Returns (stream_pos, body)
+    with dense positions 1..n.
+
+    A bounded replay (``limit`` given, the reference's ``--max-messages``)
+    is a top-N: ``orderBy(...).limit(limit)`` plans as one
+    TakeOrderedAndProject stage that keeps at most ``limit`` rows per
+    task, so its memory is bounded by the limit, not by the corpus; the
+    positions are a ``row_number`` over those ``limit`` rows. Spark falls
+    back to a sort + limit on its own above
+    ``spark.sql.execution.topKSortFallbackThreshold``. An unbounded replay
+    numbers the whole split with the distributed two-phase
+    ``with_global_position`` instead — no single-partition sort.
+    """
     from pyspark.sql.window import Window
 
     from bigdataminingproject_spark.plans.ordering import with_global_position
 
     df = messages.filter(F.col("body").isNotNull() & (F.col("body") != ""))
+    tiebreakers = [F.col("conv_id"), F.col("msg_index")]
+    order = tiebreakers
     if sort_by_time:
+        order = [F.col("time").asc_nulls_last()] + tiebreakers
+    if limit is None and sort_by_time:
         # distributed two-phase global position over the numeric time
         # column (nulls last, reference S4) — no single-partition sort
         df = with_global_position(
-            df,
-            "time",
-            tiebreakers=[F.col("conv_id"), F.col("msg_index")],
-            pos_col="stream_pos",
+            df, "time", tiebreakers=tiebreakers, pos_col="stream_pos"
         )
     else:
-        # arrival order (string keys): plain window — only used for
-        # small bounded replays, documented scale limitation
+        if limit is not None:
+            df = df.orderBy(*order).limit(limit)
+        # a window over at most ``limit`` rows; an unbounded arrival-order
+        # replay (string keys) is a documented scale limitation
         df = df.withColumn(
-            "stream_pos",
-            F.row_number().over(
-                Window.orderBy(F.col("conv_id"), F.col("msg_index"))
-            ),
+            "stream_pos", F.row_number().over(Window.orderBy(*order))
         )
-    if limit is not None:
-        df = df.filter(F.col("stream_pos") <= limit)
     return df.select("stream_pos", "body")
 
 

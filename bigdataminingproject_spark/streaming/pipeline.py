@@ -536,7 +536,7 @@ def q_stream_snapshots(spark, sf_dir: str) -> DataFrame:
     )
     return snapshot_summary_from_flags(
         with_snapshot_position(flagged, "msg_id"), text_col="body"
-    )
+    ).orderBy("snapshot_id")
 
 
 def run_streaming_detector_pipeline(
@@ -606,12 +606,14 @@ def run_streaming_detector_pipeline(
     ordered = snap_ops.with_snapshot_position(
         scored, "msg_id", update_interval
     ).persist()
-    snapshot_rows = snap_ops.snapshot_summary_from_flags(
-        ordered, text_col="body"
-    ).collect()
-    burst_rows = snap_ops.burst_windows_from_ordered(
-        ordered, text_col="body"
-    ).collect()
+    snapshot_rows = sorted(
+        snap_ops.snapshot_summary_from_flags(ordered, text_col="body").collect(),
+        key=lambda r: r["snapshot_id"],
+    )
+    burst_rows = sorted(
+        snap_ops.burst_windows_from_ordered(ordered, text_col="body").collect(),
+        key=snap_ops.burst_order,
+    )
     final_top = {
         r["token"]: r["token_count"]
         for r in top_k_tokens(

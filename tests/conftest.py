@@ -44,6 +44,9 @@ _TIER0 = [
     "test_text_functions.py",
     "test_bench_line.py",
     "test_qdigest.py",
+    "test_conversations.py",
+    "test_snapshots.py",
+    "test_cli.py",
 ]
 
 

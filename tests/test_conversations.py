@@ -112,6 +112,28 @@ def test_ordered_stream_limit(spark, corpus_dir):
     assert ordered_message_stream(msgs, limit=2).count() == 2
 
 
+def test_bounded_stream_is_prefix_of_unbounded(spark, corpus_dir):
+    """The bounded replay (a top-N) equals the first k rows of the
+    unbounded one (global-position numbering), positions and bodies,
+    down to the null-time row that sorts last."""
+    df = filter_conversations(read_conversation_dir(spark, corpus_dir))
+    msgs = messages_table(df)
+    full = [
+        (r["stream_pos"], r["body"])
+        for r in ordered_message_stream(msgs).orderBy("stream_pos").collect()
+    ]
+    assert len(full) == 4
+    assert full[-1] == (4, "no time message")
+    for k in (1, 2, len(full)):
+        bounded = [
+            (r["stream_pos"], r["body"])
+            for r in ordered_message_stream(msgs, limit=k)
+            .orderBy("stream_pos")
+            .collect()
+        ]
+        assert bounded == full[:k]
+
+
 def test_split_corpus_deterministic(spark, corpus_dir):
     df = read_conversation_dir(spark, corpus_dir)
     a = {(r["conv_id"], r["split"]) for r in split_corpus(df).collect()}

@@ -82,23 +82,33 @@ def test_final_top_tokens(spark, stream):
     assert top["burstword"] == 25
 
 
-def test_stream_scored_and_ordered_once(spark, stream, rebind):
-    """One run scores duplicates once and numbers the analyzed stream
-    once; totals and every snapshot operator share those relations.
-    Under exclusion the kept messages (0-based positions 0, 100 and
-    175) are renumbered densely to snapshot positions 1, 2 and 3."""
-    calls = {"duplicate_scores": 0, "with_global_position": 0}
+def assert_same_summary(got, expected):
+    """Summaries are equal; the score average only up to float summation
+    order, which follows the shuffle partitioning of the positions."""
+    got, expected = dict(got), dict(expected)
+    got_dups = dict(got.pop("duplicates"))
+    exp_dups = dict(expected.pop("duplicates"))
+    assert got_dups.pop("avg_score") == pytest.approx(exp_dups.pop("avg_score"))
+    assert got_dups == exp_dups
+    assert got == expected
+
+
+@pytest.fixture
+def calls(rebind):
+    """Counts of the pipeline's scoring core and global numbering calls
+    during one test."""
+    counts = {"with_duplicate_scores": 0, "with_global_position": 0}
 
     def counting(original):
         def counted(*args, **kwargs):
-            calls[original.__name__] += 1
+            counts[original.__name__] += 1
             return original(*args, **kwargs)
 
         return counted
 
     rebind(
         "bigdataminingproject_spark.operators.dedup",
-        "duplicate_scores",
+        "with_duplicate_scores",
         counting,
     )
     rebind(
@@ -106,6 +116,14 @@ def test_stream_scored_and_ordered_once(spark, stream, rebind):
         "with_global_position",
         counting,
     )
+    return counts
+
+
+def test_stream_scored_and_ordered_once(spark, stream, calls):
+    """One run scores duplicates once and numbers the analyzed stream
+    once; totals and every snapshot operator share those relations.
+    Under exclusion the kept messages (0-based positions 0, 100 and
+    175) are renumbered densely to snapshot positions 1, 2 and 3."""
     zero_based = stream.selectExpr("stream_pos - 1 AS stream_pos", "body")
     summary = run_detector_pipeline(
         zero_based,
@@ -113,7 +131,7 @@ def test_stream_scored_and_ordered_once(spark, stream, rebind):
         freq_queries=["calm", "filler"],
         exclude_duplicates=True,
     )
-    assert calls == {"duplicate_scores": 1, "with_global_position": 1}
+    assert calls == {"with_duplicate_scores": 1, "with_global_position": 1}
     assert summary["processed"] == 3
     assert summary["excluded_duplicates"] == 197
     assert summary["duplicates"]["total"] == 0
@@ -125,3 +143,36 @@ def test_stream_scored_and_ordered_once(spark, stream, rebind):
     assert snaps[1]["top_10_tokens"]["burstword"] == 1
     assert summary["final_top_tokens"] == snaps[1]["top_10_tokens"]
     assert summary["frequency_estimates"] == {"calm": 2, "filler": 1}
+
+
+@pytest.fixture(scope="module")
+def dense_summary(spark, stream):
+    """The keep-mode summary of the 1-based stream, every 50 messages."""
+    return run_detector_pipeline(
+        stream, update_interval=50, freq_queries=["calm", "burstword"]
+    )
+
+
+def test_dense_keep_mode_is_not_renumbered(spark, stream, dense_summary, calls):
+    """A keep-mode stream whose positions are already dense (here 0-based,
+    as a shifted replay would be) is positioned by projection: no global
+    numbering pass, same summary as the 1-based stream."""
+    zero_based = stream.selectExpr("stream_pos - 1 AS stream_pos", "body")
+    summary = run_detector_pipeline(
+        zero_based, update_interval=50, freq_queries=["calm", "burstword"]
+    )
+    assert calls["with_global_position"] == 0
+    snaps = summary["periodic_snapshots"]
+    assert [s["message_count"] for s in snaps] == [50, 100, 150, 200]
+    assert_same_summary(summary, dense_summary)
+
+
+def test_keep_mode_with_gaps_is_renumbered(spark, stream, dense_summary, calls):
+    """Positions with gaps (every position times 3) are renumbered through
+    the global position and give the same summary as the dense stream."""
+    gapped = stream.selectExpr("stream_pos * 3 AS stream_pos", "body")
+    summary = run_detector_pipeline(
+        gapped, update_interval=50, freq_queries=["calm", "burstword"]
+    )
+    assert calls["with_global_position"] == 1
+    assert_same_summary(summary, dense_summary)
