@@ -406,127 +406,61 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return benchmark_contamination(docs, bench)
 
 
-def _cc_flatten(edges_df: DataFrame, max_rounds: int) -> DataFrame:
-    """Min-label connected components with per-round Boruvka star
-    contraction and BATCHED pointer jumping — the engine behind
-    ``connected_components(flatten=True)``, built for graphs whose
-    diameter defeats plain propagation (the golden-record digit-chain
-    name graphs: 26+ rounds at 10x).
+def match_components(
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
+) -> DataFrame:
+    """Connected components of a match graph in one task: every id that
+    appears in a pair gets ``cluster_id`` = the smallest id reachable
+    from it — the same labels as :func:`connected_components`, for
+    graphs whose long chains would cost that loop one round of Spark
+    jobs per hop. Pairs with a null endpoint link nothing.
 
-    Round 10's version ran TWO data-dependent inner loops and the
-    driver measured the query job-count-bound: 119-150 jobs of
-    sub-second data work (a convergence probe per pointer jump, a
-    stats-reset frame rebuild via ``createDataFrame(df.rdd, schema)`` —
-    a per-row Python round trip — per jump), 25.2 s at sf0.1 with an
-    8/32-core ratio of 1.10: a pure driver/job-latency floor, not
-    compute (guide §7.3; §5: cut the plan, not the data). A raw-RDD
-    port was measured WORSE (~35 s: every Python shuffle stage carries
-    ~0.3 s of worker/pickle fixed cost). This version instead makes a
-    round = ONE lazily-composed DataFrame plan — relax, star-minimum
-    pull-back, and a FIXED batch of 2 pointer jumps, all fused by
-    Catalyst into a single job at the round's eager localCheckpoint —
-    plus one cheap convergence probe over the two checkpointed label
-    frames: exactly 2 jobs per round, ~2x fewer rounds than one jump
-    per round would need.
+    One grouped-map task over the raw pair columns: both endpoints are
+    factorized with ``sort=True`` (code order = id order; for strings
+    that is code-point order, which equals Spark's and DuckDB's UTF-8
+    byte order), then Shiloach-Vishkin hook-and-shortcut runs in numpy
+    until no edge joins two labels. Hook: each root touching a smaller
+    root points at the smallest such root. Shortcut: ``lab = lab[lab]``
+    until every tree is a star. Every hooking round merges trees, so
+    the loop ends; each root is its component's smallest code.
 
-    Correctness does not depend on how many jumps run per round: every
-    step (neighbor-min relax, old-star minimum, label(label)
-    substitution) is monotone non-increasing, stays within the
-    component's reachable node ids, and is bounded below by the
-    component minimum; the loop exits only at a full fixpoint of the
-    composed round, which forces label(u) = label(v) across every edge
-    and label = id on each component's minimum node — i.e. label = min
-    reachable node, the same fixpoint as round 10's loop and the
-    DuckDB oracle's recursive closure. Stats stay finite: the per-jump
-    3x sizeInBytes inflation localCheckpoint carries forward is reset
-    by a single RDD rebuild every 4 rounds (vs every jump before),
-    far below the ~3^18 BigInt pathology round 8 measured.
+    Scale shape: the task holds the E pairs, two int64 code arrays of
+    length E and the distinct ids, so E is bounded by one Python
+    worker's memory; the golden-record graphs are far below that.
     """
-    labels = (
-        edges_df.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
+    # imported here: the CLI's scorer imports this module without pandas
+    import numpy as np
+    import pandas as pd
+
+    id_type = pairs.schema[a_col].dataType
+    schema = StructType(
+        [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
     )
-    for rnd in range(max_rounds):
-        # (1) relax: each node takes min(own, neighbors' labels), then
-        # (2) small-star: pull each OLD star's discovered minimum back
-        # to every member (including its root) within the round — one
-        # Boruvka phase per round, O(log n) outer rounds on any graph.
-        # One eager checkpoint materializes both (job block 1).
-        nmin = (
-            edges_df.join(labels, edges_df.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("label").alias("nlabel"))
+
+    # nested, so the worker gets it by value and needs no package import
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        ends = np.concatenate([pdf["a"].to_numpy(), pdf["b"].to_numpy()])
+        codes, uniq = pd.factorize(ends, sort=True)
+        u, v = np.split(codes, 2)
+        lab = np.arange(len(uniq))
+        while True:
+            lu, lv = lab[u], lab[v]
+            cross = lu != lv
+            if not cross.any():
+                break
+            lu, lv = lu[cross], lv[cross]
+            np.minimum.at(lab, np.maximum(lu, lv), np.minimum(lu, lv))
+            while not np.array_equal(lab[lab], lab):
+                lab = lab[lab]
+        return pd.DataFrame({"doc_id": uniq, "cluster_id": uniq[lab]})
+
+    return (
+        pairs.select(
+            F.col(a_col).alias("a"), F.col(b_col).cast(id_type).alias("b")
         )
-        relaxed = labels.join(nmin, "node", "left").select(
-            "node",
-            F.col("label").alias("olabel"),
-            F.least(
-                F.col("label"), F.coalesce("nlabel", "label")
-            ).alias("rlabel"),
-        )
-        smin = relaxed.groupBy(F.col("olabel").alias("sl")).agg(
-            F.min("rlabel").alias("smin")
-        )
-        base = (
-            relaxed.join(smin, relaxed.olabel == smin.sl)
-            .select(
-                "node",
-                "olabel",
-                F.least("rlabel", "smin").alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # (3) two batched pointer jumps against the CHECKPOINTED base,
-        # label <- min(label, label(label)): labels are min-so-far so
-        # label(label) <= label keeps every substitution monotone-safe.
-        # Jumping from a checkpoint bounds the self-join plan at 2^j
-        # scans of a materialized relation (the round-10 loop instead
-        # paid a convergence probe + a per-row Python stats-reset
-        # rebuild PER JUMP — the job-count floor the driver measured).
-        cur = base
-        for _ in range(2):
-            ptr = cur.select(
-                F.col("node").alias("pnode"),
-                F.col("label").alias("plabel"),
-            )
-            cur = cur.join(
-                ptr, cur["label"] == ptr["pnode"], "left"
-            ).select(
-                "node",
-                "olabel",
-                F.least(
-                    cur["label"], F.coalesce("plabel", cur["label"])
-                ).alias("label"),
-            )
-        new_labels = cur.localCheckpoint(eager=True)  # job block 2
-        if rnd % 4 == 3:
-            # periodic Catalyst-stats reset (localCheckpoint carries
-            # the composed plan's multiplied sizeInBytes forward; the
-            # round-8 probe measured multi-thousand-digit BigInt stats
-            # arithmetic dominating planning without one)
-            new_labels = edges_df.sparkSession.createDataFrame(
-                new_labels.rdd, new_labels.schema
-            ).localCheckpoint(eager=True)
-        # convergence probe: labels only ever decrease, and olabel
-        # (the round's starting label) rode along through the jumps —
-        # one shuffle-free scan of the checkpointed frame, no join
-        changed = (
-            new_labels.filter(F.col("label") < F.col("olabel"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in "
-            f"{max_rounds} rounds"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+        .dropna()
+        .groupBy(F.lit(0).alias("_g"))
+        .applyInPandas(solve, schema=schema)
     )
 
 
@@ -535,7 +469,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_rounds: int = 25,
-    flatten: bool = False,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph: every doc
     that appears in a pair gets a ``cluster_id`` = the smallest doc id
@@ -546,19 +479,16 @@ def connected_components(
     Min-label propagation: each node starts labeled with itself; every
     round each node takes the min of its own and its neighbors' labels.
     Converges in O(graph diameter) rounds — near-dup clusters are
-    near-cliques (diameter 2-3), so 3-4 joins in practice; the loop is
-    driver-side but each round is one distributed join + groupBy keyed
-    on node id, and the convergence check is a LIMIT 1 anti-equality
-    probe, not a collect. Each round materializes its labels via
-    ``localCheckpoint`` — ``persist`` alone is NOT enough for iterative
-    algorithms: the logical plan references ``labels`` three times per
-    round, so uncut lineage grows ~3^rounds and overflows the planner's
-    stack after ~8 rounds. On a cluster, swap in reliable
-    ``checkpoint()`` (HDFS-backed) for executor-loss tolerance. For
-    graphs with long chains at 100 TB scale, the two-round-doubling
-    large-star/small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) halves the round
-    count; the diameter here never warrants it.
+    near-cliques (diameter 2-3), so 3-4 joins in practice; each round is
+    one distributed join + groupBy keyed on node id, and the
+    convergence check is a LIMIT 1 anti-equality probe, not a collect.
+    Each round materializes its labels via ``localCheckpoint`` —
+    ``persist`` alone is NOT enough: the plan references ``labels``
+    three times per round, so uncut lineage grows ~3^rounds. Stops
+    after ``max_rounds`` rounds even if labels still move. Graphs with
+    long chains (the golden-record name graphs) go to
+    :func:`match_components` instead, which solves the whole graph in
+    one task.
     """
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -568,13 +498,6 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    if flatten:
-        # Boruvka star contraction + full path compression, on RDDs —
-        # O(log n) outer rounds on any structure where plain
-        # propagation needs O(diameter), with zero per-round Catalyst
-        # planning (see _cc_flatten_rdd; flatten callers also get a
-        # guaranteed-convergence contract — it fails loud).
-        return _cc_flatten(edges, max_rounds)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()

@@ -135,7 +135,8 @@ def q_customer_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record survivorship — the last stage of the entity-
     resolution pipeline this family now covers end to end: BLOCK
     (deletion-variant key + same nation), MATCH (Levenshtein == 1),
-    CLUSTER (min-label connected components, dedup.py), then SURVIVE:
+    CLUSTER (connected components labeled by their smallest name,
+    solved in one task by ``dedup.match_components``), then SURVIVE:
     one canonical row per multi-member cluster under deterministic
     survivorship rules —
 
@@ -155,13 +156,12 @@ def q_customer_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity-sized rather than digit-space-sized. All window work is
     per-cluster (components are typo-neighborhoods, bounded by the
     blocking rule); everything upstream is the linear deletion-variant
-    fanout — no all-pairs anywhere.
+    fanout — no all-pairs anywhere. The query is one lazy plan: building
+    it runs no Spark job beyond reading the table.
     """
     from pyspark.sql.window import Window
 
-    from bigdataminingproject_spark.operators.dedup import (
-        connected_components,
-    )
+    from bigdataminingproject_spark.operators.dedup import match_components
 
     cust = load_table(spark, sf_dir, "customer")
     names = cust.select(F.col("c_name").alias("term")).distinct()
@@ -185,13 +185,11 @@ def q_customer_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nk_a") == F.col("nk_b"))
         .select("term_a", "term_b")
     )
-    # flatten=True: digit-substitution name chains give these
-    # components diameters in the tens-to-hundreds (unlike the
-    # near-clique dedup graphs CC's default serves) — pointer jumping
-    # converges in O(log diameter) rounds
-    labels = connected_components(
-        pairs, "term_a", "term_b", flatten=True
-    ).select(
+    # digit-substitution name chains make these components path-like
+    # (unlike the near-clique dedup graphs connected_components serves),
+    # and propagation pays a round of Spark jobs per hop; the whole
+    # match graph is small, so it is solved in one task
+    labels = match_components(pairs, "term_a", "term_b").select(
         F.col("doc_id").alias("c_name"), F.col("cluster_id").alias("cl")
     )
     mem = cust.join(labels, "c_name", "left").withColumn(

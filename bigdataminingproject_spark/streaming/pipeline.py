@@ -598,13 +598,23 @@ def run_streaming_detector_pipeline(
         F.count(F.lit(1)).alias("processed"),
         F.sum(F.col("is_duplicate").cast("int")).alias("dups"),
         F.sum("duplicate_score").alias("score_sum"),
+        F.min("msg_id").alias("pos_min"),
+        F.max("msg_id").alias("pos_max"),
     ).first()
     processed = totals["processed"]
     dup_count = int(totals["dups"] or 0)
     # the snapshot counters read the STREAMED flags, never a batch
-    # re-score; one ordered relation feeds snapshots and burst
+    # re-score; one ordered relation feeds snapshots and burst. An
+    # already-dense stream is only shifted to start at 1.
+    dense = (
+        processed > 0
+        and processed == totals["pos_max"] - totals["pos_min"] + 1
+    )
     ordered = snap_ops.with_snapshot_position(
-        scored, "msg_id", update_interval
+        scored,
+        "msg_id",
+        update_interval,
+        dense_from=totals["pos_min"] if dense else None,
     ).persist()
     snapshot_rows = sorted(
         snap_ops.snapshot_summary_from_flags(ordered, text_col="body").collect(),

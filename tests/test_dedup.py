@@ -1,13 +1,20 @@
 """Dedup operator semantics against hand-computed oracles (reference A10:
-duplicate_detector.py:44-61 check-then-insert, first-occurrence exclusion)."""
+duplicate_detector.py:44-61 check-then-insert, first-occurrence exclusion),
+and the one-task match-graph solver behind golden-record clustering."""
 
 from __future__ import annotations
 
+import random
+import uuid
+
 import pytest
+from pyspark.sql import functions as F
 
 from bigdataminingproject_spark.operators.dedup import (
+    connected_components,
     duplicate_scores,
     exact_duplicates,
+    match_components,
     ngram_jaccard_pairs,
 )
 
@@ -114,3 +121,151 @@ def test_ngram_jaccard_prefix_filter_matches_bruteforce(spark, threshold):
         for r in ngram_jaccard_pairs(df, threshold=threshold).collect()
     }
     assert got == _bruteforce_jaccard(rows, threshold)
+
+
+def _labels(df):
+    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+
+def _random_pairs(rng, ids):
+    """A sparse random graph over ``ids``: several components, some of
+    them chains, with repeated and reversed pairs."""
+    return [
+        (rng.choice(ids), rng.choice(ids)) for _ in range(len(ids) * 2 // 3)
+    ]
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_match_components_equals_relational_cc(spark, seed, id_type):
+    """Row for row the labels of the relational propagation loop, on
+    seeded random graphs with integer and string ids."""
+    rng = random.Random(seed)
+    nums = rng.sample(range(10_000), 60)
+    ids = nums if id_type == "bigint" else [f"id{n}" for n in nums]
+    pairs = spark.createDataFrame(
+        _random_pairs(rng, ids), f"doc_a {id_type}, doc_b {id_type}"
+    )
+    got = sorted(match_components(pairs).collect())
+    want = sorted(connected_components(pairs, max_rounds=100).collect())
+    assert got == want
+    assert len({r["cluster_id"] for r in got}) > 1
+
+
+def test_match_components_shuffled_path_converges(spark):
+    """A 10k-node path whose ids are shuffled along it: one component,
+    labeled by its smallest id."""
+    order = list(range(10_000))
+    random.Random(7).shuffle(order)
+    pairs = spark.createDataFrame(
+        list(zip(order, order[1:])), "doc_a bigint, doc_b bigint"
+    )
+    got = _labels(match_components(pairs))
+    assert len(got) == 10_000
+    assert set(got.values()) == {0}
+
+
+def test_match_components_self_loops_and_duplicate_pairs(spark):
+    pairs = spark.createDataFrame(
+        [(1, 1), (2, 3), (3, 2), (2, 3), (5, 5)], "doc_a bigint, doc_b bigint"
+    )
+    assert _labels(match_components(pairs)) == {1: 1, 2: 2, 3: 2, 5: 5}
+
+
+def test_match_components_null_endpoints_link_nothing(spark):
+    pairs = spark.createDataFrame(
+        [(1, None), (None, 2), (3, 4), (4, None), (None, None)],
+        "doc_a bigint, doc_b bigint",
+    )
+    assert _labels(match_components(pairs)) == {3: 3, 4: 3}
+
+
+def test_match_components_empty_pairs(spark):
+    pairs = spark.createDataFrame([], "term_a string, term_b string")
+    out = match_components(pairs, "term_a", "term_b")
+    assert out.columns == ["doc_id", "cluster_id"]
+    assert [f.dataType.simpleString() for f in out.schema] == [
+        "string",
+        "string",
+    ]
+    assert out.collect() == []
+
+
+def test_match_components_label_is_spark_min_of_mixed_names(spark):
+    """Mixed case, accents and a character outside the BMP: the label is
+    the name Spark's own ``min`` picks (binary order: "Z" < "a" < "é",
+    and U+FF21 before U+1F600, which UTF-16 order would reverse)."""
+    names = ["é", "a", "Z", "b", "\U0001F600", "\uFF21"]
+    pairs = spark.createDataFrame(
+        [("é", "a"), ("a", "Z"), ("b", "é"), ("\U0001F600", "\uFF21")],
+        "doc_a string, doc_b string",
+    )
+    got = _labels(match_components(pairs))
+    assert set(got) == set(names)
+    assert set(got.values()) == {"Z", "\uFF21"}
+    want = {
+        r["c"]: r["m"]
+        for r in spark.createDataFrame(
+            [(n, int(n in ("\U0001F600", "\uFF21"))) for n in names],
+            "n string, c int",
+        )
+        .groupBy("c")
+        .agg(F.min("n").alias("m"))
+        .collect()
+    }
+    assert got["é"] == want[0] and got["\U0001F600"] == want[1]
+
+
+def test_connected_components_flatten_handles_long_chains(spark):
+    """The one-task solver must converge on a path graph whose diameter
+    exceeds the relational loop's round cap — the digit-chain regime
+    the golden-record operator runs in."""
+    n = 120  # diameter 119 >> max_rounds 25
+    df = spark.createDataFrame(
+        [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(n)],
+        "doc_a string, doc_b string",
+    )
+    out = match_components(df)
+    labels = {r["cluster_id"] for r in out.collect()}
+    assert labels == {"n0000"}  # single component, fully converged
+
+
+def test_golden_record_matches_oracle(spark, sf_dir):
+    """Block, match, cluster, survive: equal to the DuckDB oracle at
+    sf0.001, row for row."""
+    import duckdb
+
+    from bigdataminingproject_spark.operators.fuzzy import (
+        golden_record_oracle_sql,
+        q_customer_golden_record,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW customer AS SELECT * FROM '{sf_dir}/customer.parquet'"
+    )
+    cur = con.execute(golden_record_oracle_sql())
+    want = cur.fetchall()
+    df = q_customer_golden_record(spark, sf_dir)
+    assert df.columns == [d[0] for d in cur.description]
+    got = [tuple(r) for r in df.collect()]
+    assert want and sorted(got) == sorted(want)
+
+
+def test_golden_record_builds_lazily(spark, sf_dir):
+    """Building the golden-record DataFrame runs at most one Spark job
+    (reading the table); clustering runs inside the final plan."""
+    from bigdataminingproject_spark.operators.fuzzy import (
+        q_customer_golden_record,
+    )
+
+    sc = spark.sparkContext
+    group = f"golden_record_build_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "build q_customer_golden_record")
+    try:
+        df = q_customer_golden_record(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert df.count() > 0

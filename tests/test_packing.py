@@ -101,16 +101,3 @@ def test_empty_docs_get_zero_tokens(spark):
     got = {r["doc_id"]: r["n_tokens"] for r in pack_sequences(docs).collect()}
     assert got == {0: 0, 1: 3}
 
-
-def test_connected_components_flatten_handles_long_chains(spark):
-    """Pointer-jumping mode must converge on a path graph whose
-    diameter exceeds the round cap — the digit-chain regime the
-    golden-record operator runs in."""
-    n = 120  # diameter 119 >> max_rounds 25
-    df = spark.createDataFrame(
-        [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(n)],
-        "doc_a string, doc_b string",
-    )
-    out = connected_components(df, max_rounds=25, flatten=True)
-    labels = {r["cluster_id"] for r in out.collect()}
-    assert labels == {"n0000"}  # single component, fully converged

@@ -190,22 +190,81 @@ def test_streaming_pipeline_snapshots_use_streamed_flags(
         "duplicate_scores",
         refuse,
     )
-    # 60 exact repeats (59 duplicates), then 60 one-shingle repeats whose
-    # 46th message adds a fresh shingle (score 0.5, kept): 59 + 58 = 117
-    rows = [(pos, "repeated filler body text") for pos in range(1, 61)]
-    rows += [
-        (60 + i, "different second phase" + (" hotword" if i >= 46 else ""))
-        for i in range(1, 61)
-    ]
-    src = spark.createDataFrame(rows, "stream_pos long, body string")
+    numbered = _count_global_positions(rebind)
     live = run_streaming_detector_pipeline(
-        spark, src, str(tmp_path / "flags_stage"), chunks=3, update_interval=50
+        spark,
+        _two_phase_stream(spark, 1),
+        str(tmp_path / "flags_stage"),
+        chunks=3,
+        update_interval=50,
     )
     assert live["duplicates"]["total"] == 117
     assert [
         (s["message_count"], s["duplicates_so_far"])
         for s in live["periodic_snapshots"]
     ] == [(50, 49), (100, 98), (120, 117)]
+    # the stream is dense, so it is shifted to start at 1, not renumbered
+    assert numbered == [0]
+
+
+def test_streaming_pipeline_renumbers_gapped_positions(
+    spark, tmp_path, rebind
+):
+    """Positions with gaps (every position times 3) go through one
+    global numbering pass and give the dense stream's snapshots."""
+    from bigdataminingproject_spark.streaming.pipeline import (
+        run_streaming_detector_pipeline,
+    )
+
+    numbered = _count_global_positions(rebind)
+    live = run_streaming_detector_pipeline(
+        spark,
+        _two_phase_stream(spark, 3),
+        str(tmp_path / "gapped_stage"),
+        chunks=3,
+        update_interval=50,
+    )
+    assert live["duplicates"]["total"] == 117
+    assert [
+        (s["message_count"], s["duplicates_so_far"])
+        for s in live["periodic_snapshots"]
+    ] == [(50, 49), (100, 98), (120, 117)]
+    assert numbered == [1]
+
+
+def _two_phase_stream(spark, step):
+    """60 exact repeats (59 duplicates), then 60 one-shingle repeats whose
+    46th message adds a fresh shingle (score 0.5, kept): 59 + 58 = 117
+    duplicates, at positions ``step``, ``2 * step``, ..."""
+    rows = [(pos, "repeated filler body text") for pos in range(1, 61)]
+    rows += [
+        (60 + i, "different second phase" + (" hotword" if i >= 46 else ""))
+        for i in range(1, 61)
+    ]
+    return spark.createDataFrame(
+        [(pos * step, body) for pos, body in rows],
+        "stream_pos long, body string",
+    )
+
+
+def _count_global_positions(rebind):
+    """A one-element list counting ``with_global_position`` calls for the
+    rest of the test."""
+    numbered = [0]
+
+    def counting(original):
+        def counted(*args, **kwargs):
+            numbered[0] += 1
+            return original(*args, **kwargs)
+
+        return counted
+
+    rebind(
+        "bigdataminingproject_spark.plans.ordering",
+        "with_global_position",
+        counting,
+    )
+    return numbered
 
 
 def test_streaming_token_counts_match_batch(spark, tmp_path):
