@@ -65,17 +65,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # so the capped run always re-attests what moved and staleness decays
     # round over round. Unchanged tiers keep their last-green driver rows
     # (append-only git diffs prove non-movement).
-    # ROUND 6 rotation (VERDICT r5 #1): tier 0 = the two new round-6
-    # queries + every query whose code or oracle changed this round
-    # (LTTB fallback fix; count-aware LSH/SemDeDup oracles and the v4
-    # composition that embeds one; curation cache keying; maintenance
-    # temp hygiene); then the 3 never-driver-attested round-5 queries
-    # and the 5 r2-deferred map-only transforms — after this round,
-    # every registry query's latest driver row is r3+ config and no
-    # entry is driver-unattested. The remaining ~35 slots burn the
-    # oldest (r3) backlog in registry order; ~13 r3 rows roll to round
-    # 7. Dict-literal order below does not carry the rotation: the
-    # explicit _R6_* lists at the end of this function do.
+    # The explicit lists at the end of this function set the order.
     reg = {
         # round 4 additions (driver-attested green in r4)
         "q_doc_association_rules": association.q_doc_association_rules,
@@ -550,285 +540,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q4_order_priority": tpch.q4_order_priority,
         "q_media_features": multimodal.q_media_features,
     }
-    # Round-8 rotation (VERDICT r7 #2): driver consumes ~50 rows in
-    # dict order. This round's window = 4 tier-0 slots + the ENTIRE
-    # 46-row r4-latest backlog (oldest attestation in the registry),
-    # so after round 8 no query's latest driver row predates r5 config
-    # — the VERDICT r7 #2 done-criterion.
-    #
-    # Nine queries' code changed this round; only four fit above the
-    # backlog, so tier-0 is triaged by materiality:
-    #   IN the window: q_knn_default (new), q_stream_kmv_maintenance
-    #   (staged replay now pre-hashed — a real plan change, VERDICT r7
-    #   #3), q_knn_pq (PQ code-space densification, ADVICE r7 —
-    #   output-identical at attested SFs by construction, re-attested
-    #   as the family representative), q_part_coreness (ADVICE r7
-    #   upgraded in-round: the new convergence guard CAUGHT the 100x
-    #   replica's graph pre-fixpoint at the old fixed 28-round unroll,
-    #   so the iteration is now adaptive-to-fixpoint with cap
-    #   KCORE_ROUNDS=64 and the oracle unrolls 64 — outputs at every
-    #   attested SF unchanged by idempotence, re-attested to prove it).
-    #   DEFERRED to round 9's tier 0 (listed first below the fold,
-    #   positions 51-55): q_knn_pq_rerank / q_knn_ivfpq /
-    #   q_knn_ivfpq_rerank (same densification — identity renumbering
-    #   whenever no Lloyd cluster empties, which holds at every
-    #   attested SF; pytest-pinned; ivfpq_rerank's ORACLE additionally
-    #   gained MATERIALIZED hints + a vec-level pre-join after its
-    #   un-hinted DuckDB plan ate >100 GB on the 100x replica —
-    #   semantic no-op, re-verified exact at sf0.01),
-    #   q_stream_kcore_maintenance (same guard via coreness_hindex),
-    #   q_stream_dedup (try/finally temp hygiene + eager
-    #   materialization only). All nine were verified
-    #   green against their oracles at sf0.01 by this round's local
-    #   full-gate runs (tools/check_correctness.py) — the deferral
-    #   trades only DRIVER re-attestation, not verification.
-    # (streaming/replay.py also changed — files_per_trigger staging
-    # fan-out + the ordered path dropping its full count() — but for
-    # every files_per_trigger=1 caller the staged bytes and file
-    # layout are identical, so consumers other than the KMV twin are
-    # covered by the full local gate + pytest, not tier-0 slots.)
-    tier0_r8 = [
-        "q_knn_default",
-        "q_stream_kmv_maintenance",
-        "q_knn_pq",
-        "q_part_coreness",
-    ]
-    deferred_r9_tier0 = [
-        "q_knn_pq_rerank",
-        "q_knn_ivfpq",
-        "q_knn_ivfpq_rerank",
-        "q_stream_kcore_maintenance",
-        "q_stream_dedup",
-    ]
-    # Round-7 rotation (historical — superseded by the r8 lists above):
-    # tier 0 = the 31 new round-7 queries plus the three whose code or
-    # oracle changed that round (34 slots); then the 16 r3-latest rows.
-    tier0 = [
-        # new this round: streaming v4 curation maintenance (VERDICT
-        # r6 #2 — embedding-LSH + SemDeDup + span stages incrementally
-        # maintained in the append-only store)
-        "q_stream_curation_v4_maintenance",
-        # new this round: inverted-index maintenance over the folding
-        # (merge-operator) LSM store
-        "q_stream_index_maintenance",
-        # code changed this round: LSM part compaction in the
-        # append-only streaming state store (VERDICT r6 #3)
-        "q_stream_curation_maintenance",
-        # code + oracle changed this round: count-aware IVF quantizer
-        # layout (VERDICT r6 #5)
-        "q_knn_ivf_det",
-        # oracle changed this round: plane-budget error() guard
-        # (ADVICE r6 — non-semantic at test scale, re-attested anyway)
-        "q_embedding_neardup_lsh",
-        # new this round: multi-pass sorted-neighborhood near-dup over
-        # the bucketed global-position infrastructure
-        "q_doc_snm_pairs",
-        # new this round: degree-oriented triangle counting on the
-        # token co-occurrence graph
-        "q_token_triangles",
-        # new this round: Efraimidis–Spirakis weighted sampling
-        # without replacement
-        "q_doc_weighted_sample",
-        # new this round: Gram-free distributed power iteration
-        "q_embedding_top_pc",
-        # new this round: streaming ES-sample maintenance twin
-        "q_stream_sample_maintenance",
-        # new this round: streaming covariance maintenance twin
-        "q_stream_covariance_maintenance",
-        # new this round: interleaved curriculum schedule (full
-        # per-group ranking via grouped_position)
-        "q_doc_curriculum",
-        # new this round: KMV bottom-k distinct sketch with
-        # set-operation estimators (sketched contamination matrix)
-        "q_source_kmv_overlap",
-        # new this round: streaming KMV-sketch maintenance twin
-        "q_stream_kmv_maintenance",
-        # new this round: product-quantization ADC ANN leg + the
-        # two-stage exact re-rank over its candidate cut
-        "q_knn_pq",
-        "q_knn_pq_rerank",
-        # new this round: prefix-factorized time-decay activity score
-        # and its mergeable decayed-counter streaming twin
-        "q_events_decay_score",
-        "q_stream_decay_maintenance",
-        # new this round: watermarked stream dedup (bounded-state
-        # dropDuplicatesWithinWatermark — the sixth streaming shape)
-        "q_stream_dedup",
-        # new this round: grid-density (DBSCAN-family) clustering and
-        # its counter-folding streaming twin
-        "q_events_grid_clusters",
-        "q_stream_grid_maintenance",
-        # new this round: the composed IVF-PQ index and its exact-
-        # refine pipeline (count-aware probe ball -> ADC shortlist ->
-        # full-vector re-rank)
-        "q_knn_ivfpq",
-        "q_knn_ivfpq_rerank",
-        # new this round: streaming ANN-index maintenance (count-
-        # invariant 16-plane codes; corpus growth widens the query-time
-        # mask instead of re-indexing)
-        "q_stream_ann_maintenance",
-        # new this round: bilinear-delta-rule incremental join+agg
-        # maintenance (differential-dataflow/DBSP shape) and its Z-set
-        # generalization under CDC retractions
-        "q_stream_delta_join_maintenance",
-        "q_stream_zset_maintenance",
-        # new this round: CMS inner-product join-size estimation (the
-        # optimizer-statistics family, count-aware width) and its
-        # count-invariant-counter streaming twin
-        "q_join_size_estimate",
-        "q_stream_join_size_maintenance",
-        # new this round: q-digest mergeable quantile sketch and its
-        # leaf-counter folding streaming twin
-        "q_events_qdigest",
-        "q_stream_qdigest_maintenance",
-        # new this round: k-core decomposition (H-index fixpoint) and
-        # its pair-counter folding streaming twin
-        "q_part_coreness",
-        "q_stream_kcore_maintenance",
-        # new this round: q-digest range-predicate selectivity (the
-        # optimizer-statistics family's range-scan half)
-        "q_events_range_selectivity",
-        # new this round: local clustering coefficient (co-purchase
-        # neighborhood closure)
-        "q_part_clustering",
-    ]
-    # the 16 r3-latest rows, registry order (VERDICT r6 #1)
-    backlog_r3 = [
-        "q_events_anomalous_hours",
-        "q_events_time_rollup",
-        "q_doc_tfidf_topk",
-        "q_doc_domain_cap",
-        "q_doc_shards",
-        "q_doc_unigram_nll",
-        "q_doc_winnow",
-        "q_source_contamination",
-        "q_doc_winnow_pairs",
-        "q_embedding_shard_stats",
-        "q_events_latest_state",
-        "q_events_rolling_7d",
-        "q_events_active_users",
-        "q_media_frames",
-        "q12_priority_by_returnflag",
-        "q_media_features",
-    ]
-    # r4-latest rows, registry order; ~30 fit below the r3 burn
-    backlog_r4 = [
-        "q_embedding_covariance",
-        "q_doc_inverted_index_incremental",
-        "q_events_pit_state",
-        "q_customer_skyline",
-        "q_segment_skyline",
-        "q_events_transitions",
-        "q_table_integrity",
-        "q_doc_profile",
-        "q_doc_inverted_index",
-        "q_customer_fuzzy_matches",
-        "q_doc_span_dedup",
-        "q_knn_sq8",
-        "q_kmeans_clusters",
-        "q_token_pagerank",
-        "q_source_divergence",
-        "q_events_cohort_retention",
-        "q_stream_hourly",
-        "q_events_funnel_latency",
-        "q_hard_negatives",
-        "q_corpus_diff",
-        "q_lineitem_zorder",
-        "q_events_scd2",
-        "q_knn_truncated_recall",
-        "q_stream_sessions",
-        "q_doc_apply_mixture",
-        "q_doc_gopher_gate",
-        "q_knn_ivf_probe_curve",
-        "q_events_value_quantiles",
-        "q_events_latency_by_type",
-        "q_events_hourly_incremental",
-        "q_doc_blocklist",
-        "q_doc_quality_classifier",
-        "q_doc_chunks",
-        "q_doc_pmi_collocations",
-        "q_doc_leakage_split",
-        "q_doc_bpe_pairs",
-        "q_label_centroid_stats",
-        "q_hybrid_search",
-        "q_corpus_datacard",
-        "q_corpus_curation_v3",
-        "q_doc_bm25_topk",
-        "q_doc_bigram_nll",
-        "q_doc_dsir_weights",
-        "q_corpus_curation_v2",
-        "q_doc_token_budget",
-        "q_doc_tokens_topk",
-    ]
-    # Round-8b additions (landed after the round-8 window was pinned
-    # and closing attestations recorded): placed BELOW the deferred
-    # slots so they cannot displace a pinned re-attestation; they rank
-    # as never-attested tier-1 in round 9's rotation. Verified this
-    # round by the local full oracle gate.
-    new_r8b = [
-        "q_doc_heavy_hitters",
-        "q_stream_hh_maintenance",
-        "q_events_exact_quantiles",
-        "q_stream_pagerank_maintenance",
-        "q_events_grouped_exact_quantiles",
-        "q_doc_weighted_length_quantiles",
-        "q_stream_retention_maintenance",
-        "q_embedding_coreset",
-        "q_events_mad_outliers",
-        "q_doc_source_heavy_hitters",
-        "q_doc_source_weighted_length",
-        "q_lineitem_aqp_revenue",
-        "q_lineitem_aqp_by_flag",
-    ]
-    # Round-9 rotation (standing policy above; COVERAGE round-8b
-    # carry-forward queue #1): the driver consumes ~50 rows in dict
-    # order, so the round-9 window is
-    #   (1) the five round-8-deferred re-attestations (code changed in
-    #       r8, outputs pinned identical, local-gate verified — they
-    #       owe a DRIVER row),
-    #   (2) every never-driver-attested registry row: the 13 round-8b
-    #       additions, q_stream_rollup_maintenance (a round-5 query
-    #       every capped window since has skipped — verified green by
-    #       each round's local full gate), and the round-9 additions
-    #       (new_r9, extended as the round lands new operators),
-    #   (3) the 47-row r5-latest backlog, registry order, oldest
-    #       staleness in the registry; whatever does not fit below the
-    #       ~50-row cap rolls to round 10.
-    never_attested = new_r8b + ["q_stream_rollup_maintenance"]
-    new_r9 = [
-        "q_events_equidepth_hist",
-        "q_events_hist_selectivity",
-        "q_events_interval_join",
-        "q_part_itemsim",
-        "q_part_communities",
-        "q_events_winsorized_stats",
-        "q_lineitem_aqp_quantile",
-        "q_events_linear_trend",
-        "q_events_autocorr",
-        "q_events_cusum_changepoint",
-        "q_stream_regression_maintenance",
-        "q_events_mi",
-        "q_orders_fd_profile",
-        "q_events_bootstrap_ci",
-        "q_embedding_knn_outliers",
-        "q_stream_hist_maintenance",
-        "q_stream_mi_maintenance",
-        "q_events_psi_drift",
-        "q_events_chi2",
+    # Rotation head: the round-10 additions, the r5-latest backlog,
+    # the round-10 code-touched queries, then the round-10b additions.
+    # Every other query follows in registry order.
+    new_r10 = [
+        "q_embedding_knn_outliers_ivf",
+        "q_lineitem_aqp_quantile_sample",
+        "q4_order_priority",
+        "q_events_xcorr",
+        "q_events_seasonal_anomaly",
+        "q_orders_dependence_profile",
+        "q_events_theil_sen",
+        "q_orders_benford",
         "q_stream_itemsim_maintenance",
-        "q_stream_psi_maintenance",
-        "q_stream_chi2_maintenance",
     ]
-    backlog_r5 = [
-        "q_doc_association_rules",
-        "q_events_session_paths",
-        "q_doc_term_estimates",
-        "q_doc_source_topk",
-        "q_doc_bigrams",
-        "q_doc_vocab_stats",
-        "q_dup_scores",
-        "q_dup_summary",
-        "q_exact_duplicates",
+    backlog_r10 = [
         "q_ngram_jaccard",
         "q_doc_stats",
         "q_doc_fingerprints",
@@ -868,29 +594,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q21_late_sole_shippers",
         "q22_idle_customers",
     ]
-    # Round-10 rotation (standing policy above; VERDICT r9 #3): the
-    # driver consumes ~50 rows in dict order, so the round-10 window is
-    #   (1) tier-0: the six NEW round-10 queries plus the re-
-    #       architected itemsim twin (output pinned identical, plan
-    #       rebuilt — it owes a driver row on the new code),
-    #   (2) the ENTIRE remaining r5-latest backlog — the 38 rows the
-    #       round-9 window did not reach (backlog_r5 minus its first
-    #       nine, which r9 attested) — burning the r5 backlog to zero,
-    #   (3) the five round-10 code-touched queries whose outputs are
-    #       bit-identical (profiling NULL-population fix; fd empty
-    #       guard; PSI key_col parameterization at its default) —
-    #       cheap re-attestations if the window reaches them.
-    new_r10 = [
-        "q_embedding_knn_outliers_ivf",
-        "q_lineitem_aqp_quantile_sample",
-        "q4_order_priority",
-        "q_events_xcorr",
-        "q_events_seasonal_anomaly",
-        "q_orders_dependence_profile",
-        "q_events_theil_sen",
-        "q_orders_benford",
-        "q_stream_itemsim_maintenance",
-    ]
     touched_r10 = [
         "q_events_mi",
         "q_events_chi2",
@@ -898,22 +601,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_stream_chi2_maintenance",
         "q_orders_fd_profile",
     ]
-    backlog_r10 = backlog_r5[9:]  # r9 attested the first nine
-    # Round-10b additions (built after the r10 rotation head was
-    # frozen): deliberately ordered BELOW the backlog + touched block
-    # so they cannot evict an r5-backlog re-attestation slot from the
-    # driver's ~50-row window (the q_segment_rfm_skyline precedent,
-    # round 5) — next round they rank as never-attested tier-1.
-    # Locally gated at sf0.001/0.01/10x/100x this round.
     new_r10b = [
         "q_part_hop_distance",
         "q_events_hbos",
         "q_bloom_join_revenue",
         "q_stream_bfs_maintenance",
     ]
-    # r7/r8/r9 layouts kept above for the audit trail
-    del tier0, backlog_r3, tier0_r8, backlog_r4
-    del deferred_r9_tier0, never_attested, new_r9
     head = new_r10 + backlog_r10 + touched_r10 + new_r10b
     ordered = {k: reg[k] for k in head if k in reg}
     ordered.update({k: v for k, v in reg.items() if k not in ordered})

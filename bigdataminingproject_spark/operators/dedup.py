@@ -484,11 +484,11 @@ def connected_components(
     convergence check is a LIMIT 1 anti-equality probe, not a collect.
     Each round materializes its labels via ``localCheckpoint`` —
     ``persist`` alone is NOT enough: the plan references ``labels``
-    three times per round, so uncut lineage grows ~3^rounds. Stops
-    after ``max_rounds`` rounds even if labels still move. Graphs with
-    long chains (the golden-record name graphs) go to
-    :func:`match_components` instead, which solves the whole graph in
-    one task.
+    three times per round, so uncut lineage grows ~3^rounds. Raises
+    ``RuntimeError`` when labels still move after ``max_rounds`` rounds
+    rather than return unconverged labels. Graphs with long chains (the
+    golden-record name graphs) go to :func:`match_components` instead,
+    which solves the whole graph in one task.
     """
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -530,6 +530,11 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            "connected_components: labels still changed after "
+            f"max_rounds={max_rounds} rounds"
+        )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

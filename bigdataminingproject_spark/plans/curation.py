@@ -314,12 +314,12 @@ def _source_fingerprint(sf_dir: str, table: str) -> str:
 
 
 def _split_cutoff(docs: DataFrame) -> int:
-    """80/20 snapshot/delta doc_id cutoff (one scalar collect)."""
-    return int(
-        docs.agg(
-            F.floor(F.max("doc_id") * F.lit(0.8)).cast("long")
-        ).collect()[0][0]
-    )
+    """80/20 snapshot/delta doc_id cutoff (one scalar collect); 0 for
+    an empty corpus."""
+    cutoff = docs.agg(
+        F.floor(F.max("doc_id") * F.lit(0.8)).cast("long")
+    ).collect()[0][0]
+    return 0 if cutoff is None else int(cutoff)
 
 
 def materialized_state_dir(

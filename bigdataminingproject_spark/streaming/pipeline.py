@@ -21,12 +21,22 @@ at cluster scale.
 
 from __future__ import annotations
 
+import contextlib
+import os
+import tempfile
+import uuid
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bigdataminingproject_spark.functions.text import remove_stopwords, tokenize
+from bigdataminingproject_spark.sources.tables import load_table
+from bigdataminingproject_spark.streaming.replay import file_replay_source
+from bigdataminingproject_spark.streaming.statestore import AppendOnlyPartsStore
+
+# shuffle width of a bounded micro-batch drain (_microbatch_shuffle_cap)
+STREAM_SHUFFLE_CAP = 8
 
 
 def streaming_token_counts(
@@ -296,9 +306,6 @@ def streaming_duplicate_scores_tws(
     )
 
 
-import contextlib
-
-
 @contextlib.contextmanager
 def _microbatch_shuffle_cap(spark):
     """Cap ``spark.sql.shuffle.partitions`` for the duration of a
@@ -316,17 +323,13 @@ def _microbatch_shuffle_cap(spark):
     otherwise per-batch fixed cost grows linearly with cluster size,
     which is exactly the anti-scaling the round-10 driver measured on
     the stream-stream join (8-core/32-core ratio 0.42: 32 cores was
-    2.4x SLOWER than 8). Production deployments with genuinely large
-    per-trigger deltas size this via $SPARK_GRAFT_STREAM_SHUFFLE (or
-    per-query conf); the default 8 is delta-appropriate at every bench
-    SF while keeping multi-way scan/probe parallelism.
+    2.4x SLOWER than 8). ``STREAM_SHUFFLE_CAP`` = 8 is delta-appropriate
+    at every bench SF while keeping multi-way scan/probe parallelism.
 
     Partition count never changes what any query computes — only task
     fan-out; the oracle gate re-verifies every twin bit-for-bit.
     """
-    import os
-
-    cap = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    cap = STREAM_SHUFFLE_CAP
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key, "200")
     try:
@@ -374,6 +377,93 @@ def snapshot_sink(
         )
         q.awaitTermination()
     return q
+
+
+class Twin:
+    """The scaffold one streaming twin runs in (see :func:`run_twin`).
+
+    Everything a twin stages or keeps lives under one private directory:
+    ``replay`` stages a bounded source there as a file stream, ``store``
+    opens an :class:`AppendOnlyPartsStore` there, and ``path`` names any
+    other state directory. ``sink`` drains a stream through a
+    ``foreachBatch`` function; ``memory`` drains it into a memory-sink
+    table and returns that table.
+    """
+
+    def __init__(self, spark, root: str) -> None:
+        self.spark = spark
+        self.root = root
+        self.views: list[str] = []  # memory-sink tables to drop
+        self._replays = 0
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.root, name)
+
+    def replay(
+        self,
+        df: DataFrame,
+        order_col: str,
+        chunks: int = 4,
+        files_per_trigger: int = 1,
+    ) -> DataFrame:
+        self._replays += 1
+        return file_replay_source(
+            self.spark,
+            df,
+            self.path(f"replay{self._replays}"),
+            chunks=chunks,
+            files_per_trigger=files_per_trigger,
+            order_col=order_col,
+        )
+
+    def store(
+        self,
+        name: str,
+        merge_transform=None,
+        fanout: int = 2,
+        partition_col: str | None = None,
+    ) -> AppendOnlyPartsStore:
+        return AppendOnlyPartsStore(
+            self.spark,
+            self.root,
+            name,
+            merge_fanout=fanout,
+            merge_transform=merge_transform,
+            partition_col=partition_col,
+            count_rows=False,
+        )
+
+    def sink(
+        self, stream: DataFrame, upsert: Callable[[DataFrame, Any], Any]
+    ) -> None:
+        snapshot_sink(stream, upsert)
+
+    def memory(self, stream: DataFrame, output_mode: str) -> DataFrame:
+        name = f"twin_{uuid.uuid4().hex[:12]}"
+        self.views.append(name)
+        run_to_memory(stream, name, output_mode=output_mode)
+        return self.spark.table(name)
+
+
+def run_twin(spark, body: Callable[[Twin], DataFrame]) -> DataFrame:
+    """Run one streaming twin: ``body(twin)`` replays, drains and returns
+    the published relation. The relation is materialized
+    (``localCheckpoint(eager=True)``) before the twin's memory-sink
+    tables are dropped and its directory is removed, and both go on
+    error too.
+
+    A replay always stages at least one file (an empty source stages
+    one empty file), so every drain runs at least one micro-batch and
+    a store its upsert appends to unconditionally is never empty at
+    publish.
+    """
+    with tempfile.TemporaryDirectory(prefix="twin_") as root:
+        twin = Twin(spark, root)
+        try:
+            return body(twin).localCheckpoint(eager=True)
+        finally:
+            for name in twin.views:
+                spark.catalog.dropTempView(name)
 
 
 def streaming_burst_parity(
@@ -494,49 +584,42 @@ def q_stream_snapshots(spark, sf_dir: str) -> DataFrame:
     CORRECTNESS file now covers the live streaming topology, not just
     pytest (VERDICT r1 next-round item 6).
     """
-    import tempfile
-    import uuid
-
     from bigdataminingproject_spark.operators.dedup import DUP_THRESHOLD
     from bigdataminingproject_spark.operators.snapshots import (
         snapshot_summary_from_flags,
         with_snapshot_position,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import file_replay_source
 
     docs = load_table(spark, sf_dir, "documents")
     src = docs.select(
         F.col("doc_id").cast("long").alias("msg_id"),
         F.col("text").alias("body"),
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_snapshots_")
-    stream = file_replay_source(
-        spark, src, staging, chunks=10, order_col="msg_id"
-    )
-    hits = streaming_duplicate_scores(stream, msg_col="msg_id")
-    name = f"snap_hits_{uuid.uuid4().hex[:12]}"
-    run_to_memory(hits, name, output_mode="append")
-    per_msg = (
-        spark.table(name)
-        .groupBy("msg_id")
-        .agg(
+
+    def body(twin):
+        stream = twin.replay(src, "msg_id", chunks=10)
+        hits = twin.memory(
+            streaming_duplicate_scores(stream, msg_col="msg_id"), "append"
+        )
+        per_msg = hits.groupBy("msg_id").agg(
             F.round(F.avg(F.col("hit").cast("int")), 4).alias(
                 "duplicate_score"
             )
         )
-    )
-    flagged = (
-        src.join(per_msg, "msg_id", "left")
-        .withColumn(
-            "is_duplicate",
-            F.coalesce("duplicate_score", F.lit(0.0)) >= F.lit(DUP_THRESHOLD),
+        flagged = (
+            src.join(per_msg, "msg_id", "left")
+            .withColumn(
+                "is_duplicate",
+                F.coalesce("duplicate_score", F.lit(0.0))
+                >= F.lit(DUP_THRESHOLD),
+            )
+            .select("msg_id", "body", "is_duplicate")
         )
-        .select("msg_id", "body", "is_duplicate")
-    )
-    return snapshot_summary_from_flags(
-        with_snapshot_position(flagged, "msg_id"), text_col="body"
-    ).orderBy("snapshot_id")
+        return snapshot_summary_from_flags(
+            with_snapshot_position(flagged, "msg_id"), text_col="body"
+        ).orderBy("snapshot_id")
+
+    return run_twin(spark, body)
 
 
 def run_streaming_detector_pipeline(
@@ -560,7 +643,6 @@ def run_streaming_detector_pipeline(
     """
     from bigdataminingproject_spark.operators import snapshots as snap_ops
     from bigdataminingproject_spark.operators.frequency import top_k_tokens
-    from bigdataminingproject_spark.streaming.replay import file_replay_source
 
     stream = file_replay_source(
         spark,
@@ -682,40 +764,31 @@ def q_stream_hourly(spark, sf_dir: str) -> DataFrame:
     windowed-aggregation topology, complementing the stateful-dedup twin
     (q_stream_snapshots).
     """
-    import tempfile
-    import uuid
-
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     src = ev.select("event_id", "ts", "event_type", "value")
-    staging = tempfile.mkdtemp(prefix="q_stream_hourly_")
-    stream = file_replay_source(
-        spark, src, staging, chunks=10, order_col="event_id"
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("event_count"),
-            F.sum("value").alias("_v"),
+
+    def body(twin):
+        agg = (
+            twin.replay(src, "event_id", chunks=10)
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("event_count"),
+                F.sum("value").alias("_v"),
+            )
         )
-    )
-    name = f"stream_hourly_{uuid.uuid4().hex[:12]}"
-    run_to_memory(agg, name, output_mode="complete")
-    return (
-        spark.table(name)
-        .select(
-            F.col("w.start").alias("event_hour"),
-            "event_type",
-            "event_count",
-            F.round(F.col("_v"), 2).alias("total_value"),
+        return (
+            twin.memory(agg, "complete")
+            .select(
+                F.col("w.start").alias("event_hour"),
+                "event_type",
+                "event_count",
+                F.round(F.col("_v"), 2).alias("total_value"),
+            )
+            .orderBy("event_hour", "event_type")
         )
-        .orderBy("event_hour", "event_type")
-    )
+
+    return run_twin(spark, body)
 
 
 def q_stream_sessions(spark, sf_dir: str) -> DataFrame:
@@ -751,63 +824,53 @@ def q_stream_sessions(spark, sf_dir: str) -> DataFrame:
     keeps id-ordered replay: complete-mode aggregation ignores the
     watermark, and out-of-time-order merging is the thing it attests.
     """
-    import tempfile
-    import uuid
-
     from pyspark.sql.window import Window
 
     from bigdataminingproject_spark.operators.events import SESSION_GAP_MS
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
 
     ev = load_table(spark, sf_dir, "events")
     src = ev.select("event_id", "ts", "user_id", "value")
-    staging = tempfile.mkdtemp(prefix="q_stream_sessions_")
-    stream = file_replay_source(
-        spark, src, staging, chunks=10, order_col="ts"
-    )
-    agg = (
-        stream.withColumn(
-            "ts_m", F.timestamp_millis(F.unix_millis("ts"))
+
+    def body(twin):
+        agg = (
+            twin.replay(src, "ts", chunks=10)
+            .withColumn("ts_m", F.timestamp_millis(F.unix_millis("ts")))
+            .withWatermark("ts_m", "1 hour")
+            .groupBy(
+                F.session_window(
+                    "ts_m", f"{SESSION_GAP_MS} milliseconds"
+                ).alias("w"),
+                "user_id",
+            )
+            .agg(
+                F.count(F.lit(1)).alias("session_events"),
+                F.min(F.unix_millis("ts_m")).alias("_start_ms"),
+                F.max(F.unix_millis("ts_m")).alias("_end_ms"),
+                F.sum("value").alias("_v"),
+            )
         )
-        .withWatermark("ts_m", "1 hour")
-        .groupBy(
-            F.session_window(
-                "ts_m", f"{SESSION_GAP_MS} milliseconds"
-            ).alias("w"),
-            "user_id",
+        seq = Window.partitionBy("user_id").orderBy("_start_ms")
+        return (
+            twin.memory(agg, "complete")
+            .select(
+                "user_id",
+                "session_events",
+                "_start_ms",
+                (F.col("_end_ms") - F.col("_start_ms")).alias("duration_ms"),
+                F.round(F.col("_v"), 2).alias("session_value"),
+            )
+            .withColumn("session_seq", F.row_number().over(seq).cast("long"))
+            .select(
+                "user_id",
+                "session_seq",
+                "session_events",
+                "duration_ms",
+                "session_value",
+            )
+            .orderBy("user_id", "session_seq")
         )
-        .agg(
-            F.count(F.lit(1)).alias("session_events"),
-            F.min(F.unix_millis("ts_m")).alias("_start_ms"),
-            F.max(F.unix_millis("ts_m")).alias("_end_ms"),
-            F.sum("value").alias("_v"),
-        )
-    )
-    name = f"stream_sessions_{uuid.uuid4().hex[:12]}"
-    run_to_memory(agg, name, output_mode="complete")
-    seq = Window.partitionBy("user_id").orderBy("_start_ms")
-    return (
-        spark.table(name)
-        .select(
-            "user_id",
-            "session_events",
-            "_start_ms",
-            (F.col("_end_ms") - F.col("_start_ms")).alias("duration_ms"),
-            F.round(F.col("_v"), 2).alias("session_value"),
-        )
-        .withColumn("session_seq", F.row_number().over(seq).cast("long"))
-        .select(
-            "user_id",
-            "session_seq",
-            "session_events",
-            "duration_ms",
-            "session_value",
-        )
-        .orderBy("user_id", "session_seq")
-    )
+
+    return run_twin(spark, body)
 
 
 def q_stream_hourly_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -834,62 +897,34 @@ def q_stream_hourly_maintenance(spark, sf_dir: str) -> DataFrame:
     q_events_hourly's DuckDB oracle: same columns, same 2 dp
     presentation rounding applied only at the end (stored partials stay
     raw, so merges never compound rounding).
-
-    ADVICE r5 hardening: the final rollup is eagerly localCheckpoint'ed
-    (it is rollup-cardinality small) so every temp dir — replay staging
-    plus all per-batch snapshot versions — can be removed before
-    returning instead of leaking across bench best-of-N and registry
-    runs, and a zero-batch stream falls back to an empty partial rather
-    than raising KeyError.
     """
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from bigdataminingproject_spark.operators.events import (
         finish_hourly_rollup,
         hourly_rollup_partial,
         merge_hourly_rollup,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
 
     ev = load_table(spark, sf_dir, "events")
     src = ev.select("event_id", "ts", "event_type", "value")
-    staging = tempfile.mkdtemp(prefix="q_stream_maint_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_maint_state_")
-    stream = file_replay_source(
-        spark, src, staging, chunks=10, order_col="event_id"
-    )
-    latest: dict[str, str] = {}
 
-    def upsert(batch_df, batch_id):
-        delta = batch_df
-        if latest:
-            snapshot = spark.read.parquet(latest["path"])
-            merged = merge_hourly_rollup(snapshot, delta)
-        else:
-            merged = hourly_rollup_partial(delta)
-        out = os.path.join(
-            state_root, f"rollup_{batch_id}_{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(out)
-        latest["path"] = out
+    def body(twin):
+        latest: dict[str, str] = {}
 
-    try:
-        snapshot_sink(stream, upsert)
-        if "path" in latest:
-            final = spark.read.parquet(latest["path"])
-        else:  # zero-batch stream: empty partial with the right schema
-            final = hourly_rollup_partial(src.limit(0))
-        # materialize off the temp parquet before it is removed
-        return finish_hourly_rollup(final).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            delta = batch_df
+            if latest:
+                snapshot = spark.read.parquet(latest["path"])
+                merged = merge_hourly_rollup(snapshot, delta)
+            else:
+                merged = hourly_rollup_partial(delta)
+            out = twin.path(f"rollup_{batch_id}")
+            merged.write.mode("overwrite").parquet(out)
+            latest["path"] = out
+
+        twin.sink(twin.replay(src, "event_id", chunks=10), upsert)
+        return finish_hourly_rollup(spark.read.parquet(latest["path"]))
+
+    return run_twin(spark, body)
 
 
 def q_stream_curation_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -917,11 +952,6 @@ def q_stream_curation_maintenance(spark, sf_dir: str) -> DataFrame:
     (the single-merge theorem applied inductively; each batch's ids
     exceed all prior state ids by replay order).
 
-    Temp hygiene mirrors the hourly twin: the final manifest is
-    localCheckpoint'ed (kept-set sized) and every staging/state dir is
-    removed before returning; a zero-batch stream degrades to the
-    day-0 state alone.
-
     Round 7 (VERDICT r6 #3): the raw ``manifest_parts`` /
     ``shingle_parts`` lists became :class:`AppendOnlyPartsStore`\\ s —
     the binary-counter LSM compaction bounds the live part count at
@@ -930,22 +960,12 @@ def q_stream_curation_maintenance(spark, sf_dir: str) -> DataFrame:
     replay exercises real merge-rewrites under the oracle gate;
     ``tools/compaction_probe.py`` measures the 16-batch wall-time curve.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.dedup import shingle_relation
     from bigdataminingproject_spark.plans.curation import (
         _split_cutoff,
         curate_delta_state,
         materialized_shingles_dir,
         materialized_state_dir,
-    )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -954,35 +974,25 @@ def q_stream_curation_maintenance(spark, sf_dir: str) -> DataFrame:
     delta = docs.filter(F.col("doc_id") > cutoff).select("doc_id", "text")
     day0_dir = materialized_state_dir(spark, sf_dir, snap, cutoff)
     day0_sh = materialized_shingles_dir(spark, day0_dir)
-    staging = tempfile.mkdtemp(prefix="q_stream_cur_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_cur_state_")
-    stream = file_replay_source(
-        spark, delta, staging, chunks=4, order_col="doc_id"
-    )
-    manifest = AppendOnlyPartsStore(
-        spark, state_root, "manifest", merge_fanout=2,
-        count_rows=False,
-    )
-    manifest.attach_protected(day0_dir)  # shared cache: never merged
-    shingles = AppendOnlyPartsStore(
-        spark, state_root, "shingles", merge_fanout=2,
-        count_rows=False,
-    )
-    shingles.attach_protected(day0_sh)
 
-    def upsert(batch_df, batch_id):
-        delta_state = curate_delta_state(
-            manifest.read(), batch_df, state_shingles=shingles.read()
-        )
-        # derive runs on the rows as written (re-read is O(|delta|)),
-        # before compaction can merge the part away
-        manifest.append(
-            delta_state,
-            derive=lambda part: shingles.append(shingle_relation(part)),
-        )
+    def body(twin):
+        manifest = twin.store("manifest")
+        manifest.attach_protected(day0_dir)  # shared cache: never merged
+        shingles = twin.store("shingles")
+        shingles.attach_protected(day0_sh)
 
-    try:
-        snapshot_sink(stream, upsert)
+        def upsert(batch_df, batch_id):
+            delta_state = curate_delta_state(
+                manifest.read(), batch_df, state_shingles=shingles.read()
+            )
+            # derive runs on the rows as written (re-read is O(|delta|)),
+            # before compaction can merge the part away
+            manifest.append(
+                delta_state,
+                derive=lambda part: shingles.append(shingle_relation(part)),
+            )
+
+        twin.sink(twin.replay(delta, "doc_id"), upsert)
         return (
             manifest.read()
             .filter(F.col("dropped_neardup") == 0)
@@ -991,11 +1001,9 @@ def q_stream_curation_maintenance(spark, sf_dir: str) -> DataFrame:
                 (F.col("doc_id") > cutoff).cast("int").alias("is_new"),
             )
             .orderBy("doc_id")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_curation_v4_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1021,11 +1029,10 @@ def q_stream_curation_v4_maintenance(spark, sf_dir: str) -> DataFrame:
     id-ordered chunks. ``merge_fanout=2`` so the oracle-attested run
     exercises real LSM merges. Output and oracle are
     ``q_corpus_curation_v4``'s — the cross-engine proof that k
-    incremental upserts == one full-corpus batch v4 rerun.
+    incremental upserts == one full-corpus batch v4 rerun. Every
+    upsert (day 0 included) appends a candidate part, so the
+    candidate store is never empty at publish.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.quality import (
         synthetic_pii_text,
     )
@@ -1039,13 +1046,6 @@ def q_stream_curation_v4_maintenance(spark, sf_dir: str) -> DataFrame:
         assemble_curation_v4,
         curation_v4_delta_signals,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 25 == 0)
@@ -1054,117 +1054,106 @@ def q_stream_curation_v4_maintenance(spark, sf_dir: str) -> DataFrame:
         F.col("vec_id") % 25 != 0
     )
     cutoff = _split_cutoff(train)
-    staging = tempfile.mkdtemp(prefix="q_stream_v4_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_v4_state_")
-    stores = {
-        name: AppendOnlyPartsStore(
-            spark, state_root, name, merge_fanout=2, count_rows=False
-        )
-        for name in (
-            "stats",
-            "tokc",
-            "fp",
-            "span_stats",
-            "span_h",
-            "cells",
-            "cands",
-        )
-    }
 
-    n_cells = [0]  # running count of appended cell rows (disjoint parts)
-
-    def upsert(batch_df, batch_id):
-        sigs = curation_v4_delta_signals(
-            batch_df,
-            bench,
-            redact_text=synthetic_pii_text(),
-            span_seen=stores["span_h"].read(),
-        )
-        delta_cells = semantic_cells16(
-            vecs.join(
-                batch_df.select(F.col("doc_id").alias("vec_id")),
-                "vec_id",
-                "left_semi",
+    def body(twin):
+        stores = {
+            name: twin.store(name)
+            for name in (
+                "stats",
+                "tokc",
+                "fp",
+                "span_stats",
+                "span_h",
+                "cells",
+                "cands",
             )
-        )
+        }
+        n_cells = [0]  # running count of appended cell rows (disjoint parts)
 
-        def log_candidates(part):
-            prior = stores["cells"].read()  # excludes the in-flight part
-            allc = part if prior is None else prior.unionByName(part)
-            # Cell count so far = running total over the disjoint parts
-            # (the old ``allc.count()`` re-listed and re-footer-read
-            # EVERY part directory per batch); counting only the
-            # just-written part is one single-directory metadata job,
-            # and the sum is identical because parts never overlap.
-            n_cells[0] += part.count()
-            stores["cands"].append(
-                semantic_candidates(allc, part, n_cells[0])
+        def upsert(batch_df, batch_id):
+            sigs = curation_v4_delta_signals(
+                batch_df,
+                bench,
+                redact_text=synthetic_pii_text(),
+                span_seen=stores["span_h"].read(),
+            )
+            delta_cells = semantic_cells16(
+                vecs.join(
+                    batch_df.select(F.col("doc_id").alias("vec_id")),
+                    "vec_id",
+                    "left_semi",
+                )
             )
 
-        # The six index appends are independent jobs over disjoint
-        # stores (cells chains cands through ``derive``; span_h's
-        # append must also complete before the NEXT batch reads it,
-        # which the pool barrier below guarantees). Submitting them
-        # concurrently (one thread per append) lets each job's tail
-        # back-fill the executors freed by the others (guide §2.6)
-        # instead of paying six small-job latencies end to end; every
-        # store is touched by exactly one thread, so the stores'
-        # internal part lists never race, and the written relations
-        # are bit-identical (measured 36.5 s -> 20.1 s at sf0.1).
-        # Safe against compaction: every ``sigs`` plan was eagerly
-        # localCheckpoint'ed off the span_h store by
-        # curation_v4_delta_signals, so no thread's write job re-reads
-        # part directories another thread's merge may delete
-        # (ADVICE r10 #1).
-        from concurrent.futures import ThreadPoolExecutor
+            def log_candidates(part):
+                prior = stores["cells"].read()  # excludes the in-flight part
+                allc = part if prior is None else prior.unionByName(part)
+                # Cell count so far = running total over the disjoint
+                # parts (the old ``allc.count()`` re-listed and
+                # re-footer-read EVERY part directory per batch);
+                # counting only the just-written part is one
+                # single-directory metadata job, and the sum is
+                # identical because parts never overlap.
+                n_cells[0] += part.count()
+                stores["cands"].append(
+                    semantic_candidates(allc, part, n_cells[0])
+                )
 
-        tasks = [
-            lambda: stores["stats"].append(sigs["stats"]),
-            lambda: stores["tokc"].append(sigs["tok_counts"]),
-            lambda: stores["fp"].append(sigs["winnow_fp"]),
-            lambda: stores["span_stats"].append(sigs["span_stats"]),
-            lambda: stores["span_h"].append(sigs["span_kept_hashes"]),
-            lambda: stores["cells"].append(
-                delta_cells, derive=log_candidates
-            ),
-        ]
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            for fut in [pool.submit(t) for t in tasks]:
-                fut.result()  # propagate the first failure, keep the barrier
+            # The six index appends are independent jobs over disjoint
+            # stores (cells chains cands through ``derive``; span_h's
+            # append must also complete before the NEXT batch reads it,
+            # which the pool barrier below guarantees). Submitting them
+            # concurrently (one thread per append) lets each job's tail
+            # back-fill the executors freed by the others (guide §2.6)
+            # instead of paying six small-job latencies end to end;
+            # every store is touched by exactly one thread, so the
+            # stores' internal part lists never race, and the written
+            # relations are bit-identical (measured 36.5 s -> 20.1 s at
+            # sf0.1). Safe against compaction: every ``sigs`` plan was
+            # eagerly localCheckpoint'ed off the span_h store by
+            # curation_v4_delta_signals, so no thread's write job
+            # re-reads part directories another thread's merge may
+            # delete (ADVICE r10 #1).
+            from concurrent.futures import ThreadPoolExecutor
 
-    try:
+            tasks = [
+                lambda: stores["stats"].append(sigs["stats"]),
+                lambda: stores["tokc"].append(sigs["tok_counts"]),
+                lambda: stores["fp"].append(sigs["winnow_fp"]),
+                lambda: stores["span_stats"].append(sigs["span_stats"]),
+                lambda: stores["span_h"].append(sigs["span_kept_hashes"]),
+                lambda: stores["cells"].append(
+                    delta_cells, derive=log_candidates
+                ),
+            ]
+            # propagate the first failure, keep the barrier
+            with ThreadPoolExecutor(max_workers=6) as pool:
+                for fut in [pool.submit(t) for t in tasks]:
+                    fut.result()
+
         # day 0: the id-prefix snapshot through the same delta path
         upsert(train.filter(F.col("doc_id") <= cutoff), "day0")
-        stream = file_replay_source(
-            spark,
+        stream = twin.replay(
             train.filter(F.col("doc_id") > cutoff).select(
                 "doc_id", "source", "text"
             ),
-            staging,
-            chunks=4,
-            order_col="doc_id",
+            "doc_id",
         )
-        snapshot_sink(stream, upsert)
-        cands = stores["cands"].read()
-        if cands is None:  # degenerate: no candidate pair ever logged
-            cands = spark.createDataFrame(
-                [],
-                "dup_id long, rep_id long, cosine_sim double, "
-                "dup_cell16 int, rep_cell16 int",
-            )
+        twin.sink(stream, upsert)
         # n_cells == cells.count(): appends are disjoint and the cells
         # store's compaction is a row-preserving union rewrite
-        sem_drops = semantic_drops_from_candidates(cands, n_cells[0])
+        sem_drops = semantic_drops_from_candidates(
+            stores["cands"].read(), n_cells[0]
+        )
         return assemble_curation_v4(
             stores["stats"].read(),
             stores["tokc"].read(),
             stores["fp"].read(),
             sem_drops,
             stores["span_stats"].read(),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        )
+
+    return run_twin(spark, body)
 
 
 def q_stream_index_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1189,51 +1178,24 @@ def q_stream_index_maintenance(spark, sf_dir: str) -> DataFrame:
     ``q_doc_inverted_index``'s — k micro-batch partial folds must land
     exactly on the full-corpus rebuild.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.retrieval import (
         finish_inverted_index,
         fold_index_partials,
         inverted_index_partial,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    staging = tempfile.mkdtemp(prefix="q_stream_idx_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_idx_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "index",
-        merge_fanout=2,
-        merge_transform=fold_index_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(inverted_index_partial(batch_df))
+    def body(twin):
+        store = twin.store("index", fold_index_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, docs, staging, chunks=4, order_col="doc_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream: empty index
-            state = inverted_index_partial(docs.limit(0))
-        return finish_inverted_index(
-            fold_index_partials(state)
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(inverted_index_partial(batch_df))
+
+        twin.sink(twin.replay(docs, "doc_id"), upsert)
+        return finish_inverted_index(fold_index_partials(store.read()))
+
+    return run_twin(spark, body)
 
 
 def q_stream_hh_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1258,57 +1220,27 @@ def q_stream_hh_maintenance(spark, sf_dir: str) -> DataFrame:
     land exactly on the two-pass batch answer, which cross-checks the
     MG candidate superset proof against plain exact counting.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.frequency import (
         finish_heavy_hitters,
         fold_token_counts,
         token_count_partial,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    staging = tempfile.mkdtemp(prefix="q_stream_hh_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_hh_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "hh",
-        merge_fanout=2,
-        merge_transform=fold_token_counts,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(token_count_partial(batch_df))
+    def body(twin):
+        store = twin.store("hh", fold_token_counts)
 
-    try:
-        # full-width chunks: per-batch tokenize keeps scan
-        # parallelism (single-file chunks replay as one partition —
-        # see the PageRank twin note below)
-        stream = file_replay_source(
-            spark,
-            docs,
-            staging,
-            chunks=4,
-            files_per_trigger=32,
-            order_col="doc_id",
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream: no tokens, no hitters
-            state = token_count_partial(docs.limit(0))
-        return finish_heavy_hitters(state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(token_count_partial(batch_df))
+
+        # full-width chunks: per-batch tokenize keeps scan parallelism
+        # (single-file chunks replay as one partition — see the
+        # PageRank twin note below)
+        twin.sink(twin.replay(docs, "doc_id", files_per_trigger=32), upsert)
+        return finish_heavy_hitters(store.read())
+
+    return run_twin(spark, body)
 
 
 def q_stream_retention_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1330,56 +1262,24 @@ def q_stream_retention_maintenance(spark, sf_dir: str) -> DataFrame:
     publish, never frozen into the store. Output and oracle are
     ``q_events_cohort_retention``'s.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.events import (
         cohort_triangle_from_uw,
         fold_user_weeks,
         user_week_partial,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-    staging = tempfile.mkdtemp(prefix="q_stream_ret_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_ret_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "retention",
-        merge_fanout=2,
-        merge_transform=fold_user_weeks,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(user_week_partial(batch_df))
+    def body(twin):
+        store = twin.store("retention", fold_user_weeks)
 
-    try:
-        stream = file_replay_source(
-            spark,
-            ev,
-            staging,
-            chunks=4,
-            files_per_trigger=8,
-            order_col="ts",
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream: empty triangle
-            state = user_week_partial(ev.limit(0))
-        return cohort_triangle_from_uw(
-            fold_user_weeks(state)
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(user_week_partial(batch_df))
+
+        twin.sink(twin.replay(ev, "ts", files_per_trigger=8), upsert)
+        return cohort_triangle_from_uw(fold_user_weeks(store.read()))
+
+    return run_twin(spark, body)
 
 
 def q_stream_pagerank_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1402,38 +1302,20 @@ def q_stream_pagerank_maintenance(spark, sf_dir: str) -> DataFrame:
     Output and oracle are ``q_token_pagerank``'s: the stream-built
     graph must land the walk on bit-identical doubles.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.frequency import (
         bigram_count_partial,
         fold_bigram_counts,
         pagerank_from_bigram_counts,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    staging = tempfile.mkdtemp(prefix="q_stream_pr_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_pr_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "pr_edges",
-        merge_fanout=2,
-        merge_transform=fold_bigram_counts,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(bigram_count_partial(batch_df))
+    def body(twin):
+        store = twin.store("pr_edges", fold_bigram_counts)
 
-    try:
+        def upsert(batch_df, batch_id):
+            store.append(bigram_count_partial(batch_df))
+
         # files_per_trigger=32: a single-file chunk replays as ONE
         # input partition, serializing the per-batch shingle+count onto
         # one core (the round-7 KMV pathology — measured 151.7 s vs
@@ -1441,24 +1323,12 @@ def q_stream_pagerank_maintenance(spark, sf_dir: str) -> DataFrame:
         # 100x twin at 3.2x batch (225.7 s vs 70.5 s) because tokenize
         # dominates there and 8 of 32 cores carried it — full-width
         # chunks close that to scan parity, batch boundaries unchanged.
-        stream = file_replay_source(
-            spark,
-            docs,
-            staging,
-            chunks=4,
-            files_per_trigger=32,
-            order_col="doc_id",
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream: empty graph
-            state = bigram_count_partial(docs.limit(0))
+        twin.sink(twin.replay(docs, "doc_id", files_per_trigger=32), upsert)
         return pagerank_from_bigram_counts(
-            fold_bigram_counts(state), damping=0.85, iters=3, top_n=20
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+            fold_bigram_counts(store.read()), damping=0.85, iters=3, top_n=20
+        )
+
+    return run_twin(spark, body)
 
 
 def q_stream_sample_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1483,62 +1353,31 @@ def q_stream_sample_maintenance(spark, sf_dir: str) -> DataFrame:
     engine (an imperative A-Res reservoir's state depends on arrival
     order; this one's provably doesn't).
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.sampling import (
         finish_weighted_sample,
         fold_sample_partials,
         weighted_sample_partial,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_sample_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_sample_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "sample",
-        merge_fanout=2,
-        merge_transform=fold_sample_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(
-            weighted_sample_partial(
-                batch_df,
-                F.greatest(F.lit(1), F.length("text")).cast("double"),
-            )
-        )
+    def body(twin):
+        store = twin.store("sample", fold_sample_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, docs, staging, chunks=4, order_col="doc_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream: empty sample
-            return spark.createDataFrame(
-                [], "source string, doc_id long, weight bigint, rnk int"
+        def upsert(batch_df, batch_id):
+            store.append(
+                weighted_sample_partial(
+                    batch_df,
+                    F.greatest(F.lit(1), F.length("text")).cast("double"),
+                )
             )
-        return (
-            finish_weighted_sample(state)
-            .orderBy("source", "rnk")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+        twin.sink(twin.replay(docs, "doc_id"), upsert)
+        return finish_weighted_sample(store.read()).orderBy("source", "rnk")
+
+    return run_twin(spark, body)
 
 
 def q_stream_covariance_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1560,57 +1399,26 @@ def q_stream_covariance_maintenance(spark, sf_dir: str) -> DataFrame:
     collapse absorb the summation-order difference vs the batch path,
     so the output lands exactly on ``q_embedding_covariance``'s oracle.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.similarity import (
         covariance_partials,
         finish_covariance,
         fold_covariance_partials,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_cov_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_cov_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "moments",
-        merge_fanout=2,
-        merge_transform=fold_covariance_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(covariance_partials(batch_df))
+    def body(twin):
+        store = twin.store("moments", fold_covariance_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, vecs, staging, chunks=4, order_col="vec_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [], "i int, j long, cov double"
-            )
-        return (
-            finish_covariance(state)
-            .orderBy("i", "j")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(covariance_partials(batch_df))
+
+        twin.sink(twin.replay(vecs, "vec_id"), upsert)
+        return finish_covariance(store.read()).orderBy("i", "j")
+
+    return run_twin(spark, body)
 
 
 def q_stream_kmv_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1639,25 +1447,12 @@ def q_stream_kmv_maintenance(spark, sf_dir: str) -> DataFrame:
     estimators; output and oracle are ``q_source_kmv_overlap``'s — k
     micro-batch folds must land exactly on the batch sketch.
     """
-    import shutil
-    import tempfile
-
-    from bigdataminingproject_spark.functions.text import (
-        shingles,
-        tokenize,
-    )
+    from bigdataminingproject_spark.functions.text import shingles
     from bigdataminingproject_spark.operators.kmv import (
         KMV_K,
         fold_kmv_partials,
         kmv_hash,
         kmv_pair_overlap,
-    )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1668,50 +1463,20 @@ def q_stream_kmv_maintenance(spark, sf_dir: str) -> DataFrame:
         "source",
         F.explode(shingles(tokenize(F.col("text")), 3)).alias("sh"),
     ).select("doc_id", "source", kmv_hash(F.col("sh")).alias("h"))
-    staging = tempfile.mkdtemp(prefix="q_stream_kmv_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_kmv_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "kmv",
-        merge_fanout=2,
-        merge_transform=fold_kmv_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(
-            fold_kmv_partials(batch_df.select("source", "h"), k=KMV_K)
-        )
+    def body(twin):
+        store = twin.store("kmv", fold_kmv_partials)
 
-    try:
-        stream = file_replay_source(
-            spark,
-            hashed,
-            staging,
-            chunks=4,
-            files_per_trigger=8,
-            order_col="doc_id",
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream: empty sketch
-            return spark.createDataFrame(
-                [],
-                "source_a string, source_b string, k_in_union bigint, "
-                "shared_in_k bigint, jaccard_est double, "
-                "union_est double, distinct_a_est double, "
-                "distinct_b_est double",
+        def upsert(batch_df, batch_id):
+            store.append(
+                fold_kmv_partials(batch_df.select("source", "h"), k=KMV_K)
             )
-        sk = fold_kmv_partials(state, k=KMV_K)
-        return (
-            kmv_pair_overlap(sk, k=KMV_K)
-            .orderBy("source_a", "source_b")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+        twin.sink(twin.replay(hashed, "doc_id", files_per_trigger=8), upsert)
+        sk = fold_kmv_partials(store.read(), k=KMV_K)
+        return kmv_pair_overlap(sk, k=KMV_K).orderBy("source_a", "source_b")
+
+    return run_twin(spark, body)
 
 
 def q_stream_grid_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1730,68 +1495,35 @@ def q_stream_grid_maintenance(spark, sf_dir: str) -> DataFrame:
     Output and oracle are ``q_events_grid_clusters``'s: integer-exact by
     counter mergeability.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.density import (
         fold_cell_partials,
         label_dense_cells,
-    )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "value"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_grid_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_grid_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "cells",
-        merge_fanout=2,
-        merge_transform=fold_cell_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(
-            batch_df.select(
-                F.floor(F.hour("ts").cast("double") / F.lit(1.0)).alias(
-                    "xi"
-                ),
-                F.floor(F.col("value") / F.lit(25.0)).alias("yi"),
-            )
-            .groupBy("xi", "yi")
-            .agg(F.count(F.lit(1)).alias("pts"))
-        )
+    def body(twin):
+        store = twin.store("cells", fold_cell_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "cluster_id bigint, cell_id bigint, xi bigint, "
-                "yi bigint, pts bigint",
+        def upsert(batch_df, batch_id):
+            store.append(
+                batch_df.select(
+                    F.floor(F.hour("ts").cast("double") / F.lit(1.0)).alias(
+                        "xi"
+                    ),
+                    F.floor(F.col("value") / F.lit(25.0)).alias("yi"),
+                )
+                .groupBy("xi", "yi")
+                .agg(F.count(F.lit(1)).alias("pts"))
             )
-        cells = fold_cell_partials(state)
-        return (
-            label_dense_cells(cells)
-            .orderBy("cluster_id", "cell_id")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        cells = fold_cell_partials(store.read())
+        return label_dense_cells(cells).orderBy("cluster_id", "cell_id")
+
+    return run_twin(spark, body)
 
 
 def q_stream_rollup_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1816,59 +1548,26 @@ def q_stream_rollup_maintenance(spark, sf_dir: str) -> DataFrame:
     aggregate (the 2 dp presentation round absorbs double-summation
     association order, as in every counter twin).
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.events import (
         finish_rollup,
         fold_rollup_partials,
         time_rollup_partials,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_rollup_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_rollup_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "rollup",
-        merge_fanout=2,
-        merge_transform=fold_rollup_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(time_rollup_partials(batch_df))
+    def body(twin):
+        store = twin.store("rollup", fold_rollup_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="ts"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "grain string, bucket_ts timestamp, key string, "
-                "event_count bigint, total_value double",
-            )
-        return (
-            finish_rollup(state)
-            .orderBy("grain", "bucket_ts", "key")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(time_rollup_partials(batch_df))
+
+        twin.sink(twin.replay(ev, "ts"), upsert)
+        return finish_rollup(store.read()).orderBy("grain", "bucket_ts", "key")
+
+    return run_twin(spark, body)
 
 
 def q_stream_ann_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1896,51 +1595,29 @@ def q_stream_ann_maintenance(spark, sf_dir: str) -> DataFrame:
     and oracle are ``q_knn_ivf_det``'s, and a hash match proves the
     incrementally-maintained index answers queries identically to one
     built from scratch."""
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators import similarity
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_ann_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_ann_state_")
-    store = AppendOnlyPartsStore(
-        spark, state_root, "annidx", merge_fanout=2, count_rows=False
-    )
     planes16 = similarity.det_planes(64, similarity.SEM_CELL_MAX_PLANES)
 
-    def upsert(batch_df, batch_id):
-        store.append(
-            batch_df.select(
-                "vec_id",
-                similarity.cell_id(
-                    similarity._as_double(F.col("embedding")), planes16
-                ).alias("cell16"),
-                "embedding",
-            )
-        )
+    def body(twin):
+        store = twin.store("annidx")
 
-    try:
-        stream = file_replay_source(
-            spark, emb, staging, chunks=4, order_col="vec_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "query_id bigint, neighbor_id bigint, "
-                "cosine_sim double, rank int",
+        def upsert(batch_df, batch_id):
+            store.append(
+                batch_df.select(
+                    "vec_id",
+                    similarity.cell_id(
+                        similarity._as_double(F.col("embedding")), planes16
+                    ).alias("cell16"),
+                    "embedding",
+                )
             )
+
+        twin.sink(twin.replay(emb, "vec_id"), upsert)
+        state = store.read()
         n = state.count()
         p = similarity.semantic_cell_planes(n)
         mask = F.lit((1 << p) - 1)
@@ -1954,15 +1631,11 @@ def q_stream_ann_maintenance(spark, sf_dir: str) -> DataFrame:
             similarity._as_double(F.col("embedding")).alias("q_vec"),
             F.col("cell16").bitwiseAND(mask).cast("int").alias("q_cell"),
         )
-        return (
-            similarity.ivf_probe_score(
-                assigned, q, p, similarity.auto_probe_radius(p), 10
-            )
-            .localCheckpoint(eager=True)
+        return similarity.ivf_probe_score(
+            assigned, q, p, similarity.auto_probe_radius(p), 10
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_delta_join_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -1993,17 +1666,7 @@ def q_stream_delta_join_maintenance(spark, sf_dir: str) -> DataFrame:
     once at publish, where the quantum (5e-3) dwarfs the ~1e-5
     association-order error of re-summing per-batch partials (the
     hourly-rollup twin's argument)."""
-    import shutil
-    import tempfile
     from functools import reduce
-
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2026,8 +1689,6 @@ def q_stream_delta_join_maintenance(spark, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("nationkey"),
         )
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_dj_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_dj_state_")
 
     def fold_rev(df: DataFrame) -> DataFrame:
         return df.groupBy("nationkey").agg(
@@ -2035,71 +1696,54 @@ def q_stream_delta_join_maintenance(spark, sf_dir: str) -> DataFrame:
             F.sum("n_orders").alias("n_orders"),
         )
 
-    store_o = AppendOnlyPartsStore(
-        spark, state_root, "oside", merge_fanout=2, count_rows=False
-    )
-    store_c = AppendOnlyPartsStore(
-        spark, state_root, "cside", merge_fanout=2, count_rows=False
-    )
-    store_agg = AppendOnlyPartsStore(
-        spark, state_root, "agg", merge_fanout=2, merge_transform=fold_rev,
-        count_rows=False,
-    )
+    def body(twin):
+        store_o = twin.store("oside")
+        store_c = twin.store("cside")
+        store_agg = twin.store("agg", fold_rev)
 
-    def upsert(batch_df, batch_id):
-        # pin the delta: downstream legs must not re-pull the source
-        batch_df = batch_df.localCheckpoint(eager=True)
-        d_o = batch_df.filter(F.col("side") == "O").select(
-            "custkey", "price"
-        )
-        d_c = batch_df.filter(F.col("side") == "C").select(
-            "custkey", "nationkey"
-        )
-        o_pre = store_o.read()
-        c_pre = store_c.read()
-        legs = [d_o.join(d_c, "custkey")]  # dO |><| dC
-        if c_pre is not None:
-            legs.append(d_o.join(c_pre, "custkey"))
-        if o_pre is not None:
-            legs.append(o_pre.join(d_c, "custkey"))
-        pairs = reduce(
-            lambda a, b: a.unionByName(b),
-            [leg.select("nationkey", "price") for leg in legs],
-        )
-        partial = pairs.groupBy("nationkey").agg(
-            F.sum("price").alias("rev"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        # agg append EVALUATES the legs against the pre-batch part
-        # paths BEFORE the side stores gain (and possibly compact
-        # away) the delta parts
-        store_agg.append(partial)
-        store_o.append(d_o)
-        store_c.append(d_c)
-
-    try:
-        stream = file_replay_source(
-            spark, tagged, staging, chunks=4, order_col="arrival"
-        )
-        snapshot_sink(stream, upsert)
-        state = store_agg.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [], "c_nationkey int, revenue double, n_orders bigint"
+        def upsert(batch_df, batch_id):
+            # pin the delta: downstream legs must not re-pull the source
+            batch_df = batch_df.localCheckpoint(eager=True)
+            d_o = batch_df.filter(F.col("side") == "O").select(
+                "custkey", "price"
             )
+            d_c = batch_df.filter(F.col("side") == "C").select(
+                "custkey", "nationkey"
+            )
+            o_pre = store_o.read()
+            c_pre = store_c.read()
+            legs = [d_o.join(d_c, "custkey")]  # dO |><| dC
+            if c_pre is not None:
+                legs.append(d_o.join(c_pre, "custkey"))
+            if o_pre is not None:
+                legs.append(o_pre.join(d_c, "custkey"))
+            pairs = reduce(
+                lambda a, b: a.unionByName(b),
+                [leg.select("nationkey", "price") for leg in legs],
+            )
+            partial = pairs.groupBy("nationkey").agg(
+                F.sum("price").alias("rev"),
+                F.count(F.lit(1)).alias("n_orders"),
+            )
+            # agg append EVALUATES the legs against the pre-batch part
+            # paths BEFORE the side stores gain (and possibly compact
+            # away) the delta parts
+            store_agg.append(partial)
+            store_o.append(d_o)
+            store_c.append(d_c)
+
+        twin.sink(twin.replay(tagged, "arrival"), upsert)
         return (
-            fold_rev(state)
+            fold_rev(store_agg.read())
             .select(
                 F.col("nationkey").alias("c_nationkey"),
                 F.round(F.col("rev"), 2).alias("revenue"),
                 F.col("n_orders"),
             )
             .orderBy("c_nationkey")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_zset_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -2126,17 +1770,7 @@ def q_stream_zset_maintenance(spark, sf_dir: str) -> DataFrame:
     compacted state tracks LIVE rows only: a long CDC stream of
     insert+delete churn does not grow it. Aggregate state stays
     nation-cardinality per level; floats round once at publish."""
-    import shutil
-    import tempfile
     from functools import reduce
-
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2180,8 +1814,6 @@ def q_stream_zset_maintenance(spark, sf_dir: str) -> DataFrame:
             ),
         ],
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_zset_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_zset_state_")
 
     def consolidate_o(df: DataFrame) -> DataFrame:
         return (
@@ -2203,78 +1835,57 @@ def q_stream_zset_maintenance(spark, sf_dir: str) -> DataFrame:
             F.sum("n_orders").alias("n_orders"),
         )
 
-    store_o = AppendOnlyPartsStore(
-        spark, state_root, "ozset", merge_fanout=2,
-        merge_transform=consolidate_o,
-        count_rows=False,
-    )
-    store_c = AppendOnlyPartsStore(
-        spark, state_root, "czset", merge_fanout=2,
-        merge_transform=consolidate_c,
-        count_rows=False,
-    )
-    store_agg = AppendOnlyPartsStore(
-        spark, state_root, "agg", merge_fanout=2, merge_transform=fold_rev,
-        count_rows=False,
-    )
+    def body(twin):
+        store_o = twin.store("ozset", consolidate_o)
+        store_c = twin.store("czset", consolidate_c)
+        store_agg = twin.store("agg", fold_rev)
 
-    def upsert(batch_df, batch_id):
-        batch_df = batch_df.localCheckpoint(eager=True)
-        d_o = batch_df.filter(F.col("side") == "O").select(
-            "orderkey", "custkey", "price", "w"
-        )
-        d_c = batch_df.filter(F.col("side") == "C").select(
-            "custkey", "nationkey", "w"
-        )
-        o_pre = store_o.read()
-        c_pre = store_c.read()
-
-        def pair(o, c):
-            return o.withColumnRenamed("w", "w_o").join(
-                c.withColumnRenamed("w", "w_c"), "custkey"
-            ).select(
-                "nationkey",
-                "price",
-                (F.col("w_o") * F.col("w_c")).alias("w"),
+        def upsert(batch_df, batch_id):
+            batch_df = batch_df.localCheckpoint(eager=True)
+            d_o = batch_df.filter(F.col("side") == "O").select(
+                "orderkey", "custkey", "price", "w"
             )
-
-        legs = [pair(d_o, d_c)]
-        if c_pre is not None:
-            legs.append(pair(d_o, c_pre))
-        if o_pre is not None:
-            legs.append(pair(o_pre, d_c))
-        pairs = reduce(lambda a, b: a.unionByName(b), legs)
-        partial = pairs.groupBy("nationkey").agg(
-            F.sum(F.col("price") * F.col("w")).alias("rev"),
-            F.sum("w").alias("n_orders"),
-        )
-        store_agg.append(partial)
-        store_o.append(d_o)
-        store_c.append(d_c)
-
-    try:
-        stream = file_replay_source(
-            spark, tagged, staging, chunks=4, order_col="arrival"
-        )
-        snapshot_sink(stream, upsert)
-        state = store_agg.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [], "c_nationkey int, revenue double, n_orders bigint"
+            d_c = batch_df.filter(F.col("side") == "C").select(
+                "custkey", "nationkey", "w"
             )
+            o_pre = store_o.read()
+            c_pre = store_c.read()
+
+            def pair(o, c):
+                return o.withColumnRenamed("w", "w_o").join(
+                    c.withColumnRenamed("w", "w_c"), "custkey"
+                ).select(
+                    "nationkey",
+                    "price",
+                    (F.col("w_o") * F.col("w_c")).alias("w"),
+                )
+
+            legs = [pair(d_o, d_c)]
+            if c_pre is not None:
+                legs.append(pair(d_o, c_pre))
+            if o_pre is not None:
+                legs.append(pair(o_pre, d_c))
+            pairs = reduce(lambda a, b: a.unionByName(b), legs)
+            partial = pairs.groupBy("nationkey").agg(
+                F.sum(F.col("price") * F.col("w")).alias("rev"),
+                F.sum("w").alias("n_orders"),
+            )
+            store_agg.append(partial)
+            store_o.append(d_o)
+            store_c.append(d_c)
+
+        twin.sink(twin.replay(tagged, "arrival"), upsert)
         return (
-            fold_rev(state)
+            fold_rev(store_agg.read())
             .select(
                 F.col("nationkey").alias("c_nationkey"),
                 F.round(F.col("rev"), 2).alias("revenue"),
                 F.col("n_orders"),
             )
             .orderBy("c_nationkey")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_join_size_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -2296,22 +1907,14 @@ def q_stream_join_size_maintenance(spark, sf_dir: str) -> DataFrame:
     also sum-foldable). Per-batch work is O(|delta|) hashing plus
     bounded-keyspace aggregate appends; an optimizer consuming this
     state can price the join of two STILL-GROWING relations at any
-    micro-batch boundary without scanning either."""
-    import shutil
-    import tempfile
-
+    micro-batch boundary without scanning either. On empty inputs the
+    side counts are 0, as the batch operator's ``count()`` gives, and
+    the publish is the batch's one all-null row."""
     from bigdataminingproject_spark.operators.sketches import (
         CMS_JOIN_DEPTH,
         CMS_JOIN_MAX_BITS,
         cms_join_width,
         cms_relation,
-    )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
     )
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -2329,8 +1932,6 @@ def q_stream_join_size_maintenance(spark, sf_dir: str) -> DataFrame:
             F.col("c_custkey").alias("key"),
         )
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_jsz_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_jsz_state_")
 
     def fold_cnt(df: DataFrame) -> DataFrame:
         return df.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
@@ -2338,64 +1939,35 @@ def q_stream_join_size_maintenance(spark, sf_dir: str) -> DataFrame:
     def fold_freq(df: DataFrame) -> DataFrame:
         return df.groupBy("k").agg(F.sum("cf").alias("cf"))
 
-    stores = {
-        "O": (
-            AppendOnlyPartsStore(
-                spark, state_root, "cms_o", merge_fanout=2,
-                merge_transform=fold_cnt,
-                count_rows=False,
-            ),
-            AppendOnlyPartsStore(
-                spark, state_root, "freq_o", merge_fanout=2,
-                merge_transform=fold_freq,
-                count_rows=False,
-            ),
-        ),
-        "C": (
-            AppendOnlyPartsStore(
-                spark, state_root, "cms_c", merge_fanout=2,
-                merge_transform=fold_cnt,
-                count_rows=False,
-            ),
-            AppendOnlyPartsStore(
-                spark, state_root, "freq_c", merge_fanout=2,
-                merge_transform=fold_freq,
-                count_rows=False,
-            ),
-        ),
-    }
     max_w = 1 << CMS_JOIN_MAX_BITS
 
-    def upsert(batch_df, batch_id):
-        batch_df = batch_df.localCheckpoint(eager=True)
-        for side, (cms_store, freq_store) in stores.items():
-            delta = batch_df.filter(F.col("side") == side)
-            cms_store.append(
-                cms_relation(delta, "key", CMS_JOIN_DEPTH, max_w)
+    def body(twin):
+        stores = {
+            side: (
+                twin.store(f"cms_{side.lower()}", fold_cnt),
+                twin.store(f"freq_{side.lower()}", fold_freq),
             )
-            freq_store.append(
-                delta.groupBy(F.col("key").cast("long").alias("k")).agg(
-                    F.count(F.lit(1)).alias("cf")
-                )
-            )
+            for side in ("O", "C")
+        }
 
-    try:
-        stream = file_replay_source(
-            spark, tagged, staging, chunks=4, order_col="arrival"
-        )
-        snapshot_sink(stream, upsert)
-        freq_o = stores["O"][1].read()
-        freq_c = stores["C"][1].read()
-        if freq_o is None or freq_c is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "est_rows bigint, exact_rows bigint, "
-                "overestimate_pct double",
-            )
-        freq_o = fold_freq(freq_o).localCheckpoint(eager=True)
-        freq_c = fold_freq(freq_c).localCheckpoint(eager=True)
-        n_o = freq_o.agg(F.sum("cf")).collect()[0][0]
-        n_c = freq_c.agg(F.sum("cf")).collect()[0][0]
+        def upsert(batch_df, batch_id):
+            batch_df = batch_df.localCheckpoint(eager=True)
+            for side, (cms_store, freq_store) in stores.items():
+                delta = batch_df.filter(F.col("side") == side)
+                cms_store.append(
+                    cms_relation(delta, "key", CMS_JOIN_DEPTH, max_w)
+                )
+                freq_store.append(
+                    delta.groupBy(F.col("key").cast("long").alias("k")).agg(
+                        F.count(F.lit(1)).alias("cf")
+                    )
+                )
+
+        twin.sink(twin.replay(tagged, "arrival"), upsert)
+        freq_o = fold_freq(stores["O"][1].read()).localCheckpoint(eager=True)
+        freq_c = fold_freq(stores["C"][1].read()).localCheckpoint(eager=True)
+        n_o = freq_o.agg(F.sum("cf")).collect()[0][0] or 0
+        n_c = freq_c.agg(F.sum("cf")).collect()[0][0] or 0
         width = cms_join_width(int(n_o), int(n_c))
         if width > max_w:
             raise ValueError(
@@ -2429,23 +2001,18 @@ def q_stream_join_size_maintenance(spark, sf_dir: str) -> DataFrame:
                 freq_c.withColumnRenamed("cf", "cd"), "k"
             ).agg(F.sum(F.col("cf") * F.col("cd")).alias("exact_rows"))
         )
-        return (
-            est.crossJoin(exact)
-            .select(
-                "est_rows",
-                "exact_rows",
-                F.round(
-                    (F.col("est_rows") - F.col("exact_rows"))
-                    * 100.0
-                    / F.col("exact_rows"),
-                    2,
-                ).alias("overestimate_pct"),
-            )
-            .localCheckpoint(eager=True)
+        return est.crossJoin(exact).select(
+            "est_rows",
+            "exact_rows",
+            F.round(
+                (F.col("est_rows") - F.col("exact_rows"))
+                * 100.0
+                / F.col("exact_rows"),
+                2,
+            ).alias("overestimate_pct"),
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_dedup(spark, sf_dir: str) -> DataFrame:
@@ -2469,29 +2036,14 @@ def q_stream_dedup(spark, sf_dir: str) -> DataFrame:
     Output/oracle: distinct (user, hour) activity pairs
     (the per-user hourly presence relation DAU/WAU rollups consume).
     """
-    import shutil
-    import tempfile
-    import uuid
-
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_dedup_")
-    # try/finally as the maintenance twins do (ADVICE r7): the result is
-    # eagerly materialized off the memory sink, so the replay staging
-    # dir and the sink table are both released before returning instead
-    # of leaking for the process lifetime.
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=10, order_col="ts"
-        )
+
+    def body(twin):
         deduped = (
-            stream.select(
+            twin.replay(ev, "ts", chunks=10)
+            .select(
                 "user_id",
                 F.date_trunc("hour", "ts").alias("event_hour"),
                 "ts",
@@ -2500,17 +2052,9 @@ def q_stream_dedup(spark, sf_dir: str) -> DataFrame:
             .dropDuplicatesWithinWatermark(["user_id", "event_hour"])
             .select("user_id", "event_hour")
         )
-        name = f"stream_dedup_{uuid.uuid4().hex[:12]}"
-        run_to_memory(deduped, name, output_mode="append")
-        out = (
-            spark.table(name)
-            .orderBy("user_id", "event_hour")
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        return twin.memory(deduped, "append").orderBy("user_id", "event_hour")
+
+    return run_twin(spark, body)
 
 
 def q_stream_decay_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -2533,57 +2077,26 @@ def q_stream_decay_maintenance(spark, sf_dir: str) -> DataFrame:
     the association-order difference vs the batch window's cumulative
     sum, so output and oracle are ``q_events_decay_score``'s.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.events import (
         decay_partials,
         finish_decay,
         fold_decay_partials,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_decay_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_decay_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "decay",
-        merge_fanout=2,
-        merge_transform=fold_decay_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(decay_partials(batch_df))
+    def body(twin):
+        store = twin.store("decay", fold_decay_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [], "user_id long, n_events bigint, decay_score double"
-            )
-        return (
-            finish_decay(state)
-            .orderBy("user_id")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(decay_partials(batch_df))
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        return finish_decay(store.read()).orderBy("user_id")
+
+    return run_twin(spark, body)
 
 
 def q_stream_join_attribution(spark, sf_dir: str) -> DataFrame:
@@ -2615,15 +2128,6 @@ def q_stream_join_attribution(spark, sf_dir: str) -> DataFrame:
     integers only (exact-cents convention), same DuckDB oracle as a
     batch interval join over the events table.
     """
-    import shutil
-    import tempfile
-    import uuid
-
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
@@ -2636,15 +2140,14 @@ def q_stream_join_attribution(spark, sf_dir: str) -> DataFrame:
         F.col("ts").alias("c_ts"),
         F.col("value").alias("c_value"),
     )
-    stage_p = tempfile.mkdtemp(prefix="q_stream_join_p_")
-    stage_c = tempfile.mkdtemp(prefix="q_stream_join_c_")
-    try:
-        p_stream = file_replay_source(
-            spark, purchases, stage_p, chunks=4, order_col="p_ts"
-        ).withWatermark("p_ts", "30 minutes")
-        c_stream = file_replay_source(
-            spark, clicks, stage_c, chunks=4, order_col="c_ts"
-        ).withWatermark("c_ts", "30 minutes")
+
+    def body(twin):
+        p_stream = twin.replay(purchases, "p_ts").withWatermark(
+            "p_ts", "30 minutes"
+        )
+        c_stream = twin.replay(clicks, "c_ts").withWatermark(
+            "c_ts", "30 minutes"
+        )
         pairs = p_stream.join(
             c_stream,
             F.expr(
@@ -2654,13 +2157,9 @@ def q_stream_join_attribution(spark, sf_dir: str) -> DataFrame:
             ),
             "inner",
         )
-        name = f"stream_join_{uuid.uuid4().hex[:12]}"
-        run_to_memory(pairs, name, output_mode="append")
         return (
-            spark.table(name)
-            .groupBy(
-                F.col("purchase_id"), F.col("p_user").alias("user_id")
-            )
+            twin.memory(pairs, "append")
+            .groupBy(F.col("purchase_id"), F.col("p_user").alias("user_id"))
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_prior_clicks"),
                 F.sum(
@@ -2671,11 +2170,9 @@ def q_stream_join_attribution(spark, sf_dir: str) -> DataFrame:
                 .alias("click_value_cents"),
             )
             .orderBy("purchase_id")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(stage_p, ignore_errors=True)
-        shutil.rmtree(stage_c, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_qdigest_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -2697,9 +2194,6 @@ def q_stream_qdigest_maintenance(spark, sf_dir: str) -> DataFrame:
     answer once, so k micro-batch folds land bit-exactly on the batch
     digest. Output and oracle are ``q_events_qdigest``'s.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.qdigest import (
         QD_QS,
         fold_leaf_partials,
@@ -2707,49 +2201,20 @@ def q_stream_qdigest_maintenance(spark, sf_dir: str) -> DataFrame:
         qdigest_quantiles,
         quantize_leaves,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    staging = tempfile.mkdtemp(prefix="q_stream_qdig_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_qdig_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "leaves",
-        merge_fanout=2,
-        merge_transform=fold_leaf_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(quantize_leaves(batch_df, "value"))
+    def body(twin):
+        store = twin.store("leaves", fold_leaf_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "quantile double, estimate double, digest_nodes bigint, "
-                "n_events bigint",
-            )
-        digest = qdigest_from_leaves(fold_leaf_partials(state))
-        # materialized before the finally drops the state it reads
-        return qdigest_quantiles(spark, digest, QD_QS).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(quantize_leaves(batch_df, "value"))
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        digest = qdigest_from_leaves(fold_leaf_partials(store.read()))
+        return qdigest_quantiles(spark, digest, QD_QS)
+
+    return run_twin(spark, body)
 
 
 def q_stream_kcore_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -2773,60 +2238,36 @@ def q_stream_kcore_maintenance(spark, sf_dir: str) -> DataFrame:
     graph yields the bit-identical decomposition. Output and oracle are
     ``q_part_coreness``'s.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.kcore import (
         MIN_CO_ORDERS,
         coreness_hindex,
-    )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
     )
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_kcore_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_kcore_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "paircounts",
-        merge_fanout=2,
-        merge_transform=lambda parts: parts.groupBy("a", "b").agg(
-            F.sum("c").alias("c")
-        ),
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        b = batch_df.select("o", "p").distinct()
-        pairs = (
-            b.select("o", F.col("p").alias("a"))
-            .join(b.select("o", F.col("p").alias("b")), "o")
-            .filter(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("c"))
+    def body(twin):
+        store = twin.store(
+            "paircounts",
+            lambda parts: parts.groupBy("a", "b").agg(F.sum("c").alias("c")),
         )
-        store.append(pairs)
 
-    try:
-        stream = file_replay_source(
-            spark, li, staging, chunks=4, order_col="o"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [], "part_key bigint, coreness bigint"
+        def upsert(batch_df, batch_id):
+            b = batch_df.select("o", "p").distinct()
+            pairs = (
+                b.select("o", F.col("p").alias("a"))
+                .join(b.select("o", F.col("p").alias("b")), "o")
+                .filter(F.col("a") < F.col("b"))
+                .groupBy("a", "b")
+                .agg(F.count(F.lit(1)).alias("c"))
             )
+            store.append(pairs)
+
+        twin.sink(twin.replay(li, "o"), upsert)
         edges = (
-            state.groupBy("a", "b")
+            store.read()
+            .groupBy("a", "b")
             .agg(F.sum("c").alias("c"))
             .filter(F.col("c") >= MIN_CO_ORDERS)
             .select("a", "b")
@@ -2839,11 +2280,9 @@ def q_stream_kcore_maintenance(spark, sf_dir: str) -> DataFrame:
                 F.col("coreness").cast("bigint").alias("coreness"),
             )
             .orderBy(F.desc("coreness"), "part_key")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_bfs_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -2879,111 +2318,95 @@ def q_stream_bfs_maintenance(spark, sf_dir: str) -> DataFrame:
     on the edges so far, so after the last batch the state IS
     ``q_part_hop_distance``'s answer. Output and oracle are its.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.graph import (
         bfs_relax_inserts,
         seed_parts,
     )
     from bigdataminingproject_spark.operators.kcore import MIN_CO_ORDERS
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
     )
     part = load_table(spark, sf_dir, "part")
-    staging = tempfile.mkdtemp(prefix="q_stream_bfs_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_bfs_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "paircounts",
-        merge_fanout=2,
-        merge_transform=lambda parts: parts.groupBy("a", "b").agg(
-            F.sum("c").alias("c")
-        ),
-        count_rows=False,
-    )
-    # maintained view state (vertex-bounded), seeded before any batch:
-    # all seed parts at hop 0 — exactly bfs_hops' initialization
-    view = {
-        "dist": seed_parts(part)
-        .select("v", F.lit(0).alias("hops"))
-        .distinct()
-        .localCheckpoint(eager=True),
-        "edges": None,  # previous batch's floor-crossed edge set
-    }
 
-    def upsert(batch_df, batch_id):
-        b = batch_df.select("o", "p").distinct()
-        pairs = (
-            b.select("o", F.col("p").alias("a"))
-            .join(b.select("o", F.col("p").alias("b")), "o")
-            .filter(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .persist()
+    def body(twin):
+        store = twin.store(
+            "paircounts",
+            lambda parts: parts.groupBy("a", "b").agg(F.sum("c").alias("c")),
         )
-        # Newly floor-crossed edges from a DELTA-BOUNDED probe: counts
-        # only grow, so only pairs IN this delta can cross — probe the
-        # pre-append state for just those pairs' totals (left-semi =
-        # shuffle is delta-sized; the full-state groupBy + eager
-        # checkpoint + anti-join the round-10 plan paid per batch was
-        # O(state), contradicting the contract above). Materialized
-        # eagerly BEFORE the append so no live plan re-reads part
-        # directories the append's compaction may delete.
-        prior = store.read()
-        if prior is None:
-            crossed = pairs.filter(F.col("c") >= MIN_CO_ORDERS)
-        else:
-            # broadcast the DELTA side (guide §3.1/§3.2: ship the small
-            # side, never shuffle the growing state): the semi-join
-            # probe then scans state in place with no exchange, and
-            # only the delta-matched totals shuffle into the groupBy
-            old_tot = (
-                prior.join(
-                    F.broadcast(pairs.select("a", "b")),
-                    ["a", "b"],
-                    "left_semi",
-                )
+        # maintained view state (vertex-bounded), seeded before any
+        # batch: all seed parts at hop 0 — exactly bfs_hops'
+        # initialization
+        view = {
+            "dist": seed_parts(part)
+            .select("v", F.lit(0).alias("hops"))
+            .distinct()
+            .localCheckpoint(eager=True),
+            "edges": None,  # previous batch's floor-crossed edge set
+        }
+
+        def upsert(batch_df, batch_id):
+            b = batch_df.select("o", "p").distinct()
+            pairs = (
+                b.select("o", F.col("p").alias("a"))
+                .join(b.select("o", F.col("p").alias("b")), "o")
+                .filter(F.col("a") < F.col("b"))
                 .groupBy("a", "b")
-                .agg(F.sum("c").alias("oc"))
+                .agg(F.count(F.lit(1)).alias("c"))
+                .persist()
             )
-            oc = F.coalesce(F.col("oc"), F.lit(0))
-            crossed = (
-                pairs.join(F.broadcast(old_tot), ["a", "b"], "left")
-                .filter(
-                    (oc < MIN_CO_ORDERS)
-                    & (oc + F.col("c") >= MIN_CO_ORDERS)
+            # Newly floor-crossed edges from a DELTA-BOUNDED probe:
+            # counts only grow, so only pairs IN this delta can cross —
+            # probe the pre-append state for just those pairs' totals
+            # (left-semi = shuffle is delta-sized; the full-state
+            # groupBy + eager checkpoint + anti-join the round-10 plan
+            # paid per batch was O(state), contradicting the contract
+            # above). Materialized eagerly BEFORE the append so no live
+            # plan re-reads part directories the append's compaction
+            # may delete.
+            prior = store.read()
+            if prior is None:
+                crossed = pairs.filter(F.col("c") >= MIN_CO_ORDERS)
+            else:
+                # broadcast the DELTA side (guide §3.1/§3.2: ship the
+                # small side, never shuffle the growing state): the
+                # semi-join probe then scans state in place with no
+                # exchange, and only the delta-matched totals shuffle
+                # into the groupBy
+                old_tot = (
+                    prior.join(
+                        F.broadcast(pairs.select("a", "b")),
+                        ["a", "b"],
+                        "left_semi",
+                    )
+                    .groupBy("a", "b")
+                    .agg(F.sum("c").alias("oc"))
                 )
+                oc = F.coalesce(F.col("oc"), F.lit(0))
+                crossed = (
+                    pairs.join(F.broadcast(old_tot), ["a", "b"], "left")
+                    .filter(
+                        (oc < MIN_CO_ORDERS)
+                        & (oc + F.col("c") >= MIN_CO_ORDERS)
+                    )
+                )
+            crossed = crossed.select("a", "b").localCheckpoint(eager=True)
+            store.append(pairs)
+            pairs.unpersist()
+            # full current edge set = previous ∪ crossed (disjoint:
+            # crossed pairs were below the floor, so never already
+            # edges) — exactly the old full-fold-filter relation,
+            # maintained incrementally
+            prev = view["edges"]
+            edges = (
+                crossed
+                if prev is None
+                else prev.unionAll(crossed).localCheckpoint(eager=True)
             )
-        crossed = crossed.select("a", "b").localCheckpoint(eager=True)
-        store.append(pairs)
-        pairs.unpersist()
-        # full current edge set = previous ∪ crossed (disjoint: crossed
-        # pairs were below the floor, so never already edges) — exactly
-        # the old full-fold-filter relation, maintained incrementally
-        prev = view["edges"]
-        edges = (
-            crossed
-            if prev is None
-            else prev.unionAll(crossed).localCheckpoint(eager=True)
-        )
-        view["edges"] = edges
-        view["dist"] = bfs_relax_inserts(view["dist"], crossed, edges)
+            view["edges"] = edges
+            view["dist"] = bfs_relax_inserts(view["dist"], crossed, edges)
 
-    try:
-        stream = file_replay_source(
-            spark, li, staging, chunks=4, order_col="o"
-        )
-        snapshot_sink(stream, upsert)
+        twin.sink(twin.replay(li, "o"), upsert)
         # publish = the maintained view itself — no recompute
         return (
             view["dist"]
@@ -2992,11 +2415,9 @@ def q_stream_bfs_maintenance(spark, sf_dir: str) -> DataFrame:
                 F.col("hops").cast("int").alias("hops"),
             )
             .orderBy("hops", "part_key")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_expectations_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -3021,86 +2442,50 @@ def q_stream_expectations_maintenance(spark, sf_dir: str) -> DataFrame:
     the same exact integers. Output and oracle are
     ``q_orders_expectations``'s.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.expectations import (
         fold_scalar_partials,
         orders_report_from_counters,
         orders_scalar_partial,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     orders = load_table(spark, sf_dir, "orders")
-    staging = tempfile.mkdtemp(prefix="q_stream_expect_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_expect_state_")
-    scalar_store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "scalars",
-        merge_fanout=2,
-        merge_transform=fold_scalar_partials,
-        count_rows=False,
-    )
-    key_store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "keys",
-        merge_fanout=2,
-        merge_transform=lambda parts: parts.groupBy("k").agg(
-            F.sum("c").alias("c")
-        ),
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        # two independent appends over disjoint stores (one thread
-        # each, guide §2.6): the second job's tasks back-fill the
-        # first's tail instead of paying two job latencies end to end
-        from concurrent.futures import ThreadPoolExecutor
-
-        tasks = [
-            lambda: scalar_store.append(orders_scalar_partial(batch_df)),
-            lambda: key_store.append(
-                batch_df.groupBy(
-                    F.col("o_orderkey").alias("k")
-                ).agg(F.count(F.lit(1)).alias("c"))
-            ),
-        ]
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(t) for t in tasks]:
-                fut.result()
-
-    try:
-        stream = file_replay_source(
-            spark, orders, staging, chunks=4, order_col="o_orderkey"
+    def body(twin):
+        scalar_store = twin.store("scalars", fold_scalar_partials)
+        key_store = twin.store(
+            "keys",
+            lambda parts: parts.groupBy("k").agg(F.sum("c").alias("c")),
         )
-        snapshot_sink(stream, upsert)
-        sstate, kstate = scalar_store.read(), key_store.read()
-        if sstate is None or kstate is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "rule string, metric double, op string, "
-                "threshold double, passed int",
-            )
-        scalars = fold_scalar_partials(sstate)
+
+        def upsert(batch_df, batch_id):
+            # two independent appends over disjoint stores (one thread
+            # each, guide §2.6): the second job's tasks back-fill the
+            # first's tail instead of paying two job latencies end to end
+            from concurrent.futures import ThreadPoolExecutor
+
+            tasks = [
+                lambda: scalar_store.append(orders_scalar_partial(batch_df)),
+                lambda: key_store.append(
+                    batch_df.groupBy(
+                        F.col("o_orderkey").alias("k")
+                    ).agg(F.count(F.lit(1)).alias("c"))
+                ),
+            ]
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                for fut in [pool.submit(t) for t in tasks]:
+                    fut.result()
+
+        twin.sink(twin.replay(orders, "o_orderkey"), upsert)
+        scalars = fold_scalar_partials(scalar_store.read())
         nd = (
-            kstate.groupBy("k")
+            key_store.read()
+            .groupBy("k")
             .agg(F.sum("c").alias("c"))
             .agg(F.count(F.lit(1)).alias("nd"))
         )
-        return orders_report_from_counters(
-            scalars, nd
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        return orders_report_from_counters(scalars, nd)
+
+    return run_twin(spark, body)
 
 
 def q_stream_regression_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -3122,59 +2507,28 @@ def q_stream_regression_maintenance(spark, sf_dir: str) -> DataFrame:
     tail — lands bit-for-bit on ``q_events_linear_trend``'s DuckDB
     oracle with no tolerance and no decay.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.trends import (
         finish_regression,
         fold_regression_partials,
         regression_partials,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", "value"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_reg_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_reg_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "regression",
-        merge_fanout=2,
-        merge_transform=fold_regression_partials,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(regression_partials(batch_df))
+    def body(twin):
+        store = twin.store("regression", fold_regression_partials)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "event_type string, n_rows bigint, "
-                "slope_per_hour double, intercept double, r2 double",
-            )
-        return (
-            finish_regression(fold_regression_partials(state))
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(regression_partials(batch_df))
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        return finish_regression(
+            fold_regression_partials(store.read())
+        ).orderBy("event_type")
+
+    return run_twin(spark, body)
 
 
 def q_stream_hist_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -3195,58 +2549,27 @@ def q_stream_hist_maintenance(spark, sf_dir: str) -> DataFrame:
     how a warehouse keeps its scan statistics fresh without re-scanning
     history: O(|delta|) per batch, O(domain) state, zero approximation.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.histogram import (
         HIST_BUCKETS,
         equidepth_from_counters,
         fold_value_counters,
         value_counters,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    staging = tempfile.mkdtemp(prefix="q_stream_hist_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_hist_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "hist",
-        merge_fanout=2,
-        merge_transform=fold_value_counters,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(value_counters(batch_df, "value"))
+    def body(twin):
+        store = twin.store("hist", fold_value_counters)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [], "bucket int, lo double, hi double, n_rows bigint"
-            )
-        return (
-            equidepth_from_counters(
-                fold_value_counters(state), HIST_BUCKETS
-            )
-            .orderBy("bucket")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+        def upsert(batch_df, batch_id):
+            store.append(value_counters(batch_df, "value"))
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        return equidepth_from_counters(
+            fold_value_counters(store.read()), HIST_BUCKETS
+        ).orderBy("bucket")
+
+    return run_twin(spark, body)
 
 
 def q_stream_mi_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -3264,67 +2587,31 @@ def q_stream_mi_maintenance(spark, sf_dir: str) -> DataFrame:
     ln-sum association order, so the output lands on
     ``q_events_mi``'s oracle.
     """
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as _F
-
     from bigdataminingproject_spark.operators.profiling import (
         contingency_cells,
         fold_contingency_cells,
         mi_from_cells,
     )
     from bigdataminingproject_spark.operators.trends import hour_index
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_mi_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_mi_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "mi",
-        merge_fanout=2,
-        merge_transform=fold_contingency_cells,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(
-            contingency_cells(
-                batch_df,
-                _F.col("event_type"),
-                hour_index() % _F.lit(24),
-            )
-        )
+    def body(twin):
+        store = twin.store("mi", fold_contingency_cells)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "n_rows bigint, h_x double, h_y double, "
-                "mi_nats double, nmi double",
+        def upsert(batch_df, batch_id):
+            store.append(
+                contingency_cells(
+                    batch_df, F.col("event_type"), hour_index() % F.lit(24)
+                )
             )
-        return (
-            mi_from_cells(fold_contingency_cells(state))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        return mi_from_cells(fold_contingency_cells(store.read()))
+
+    return run_twin(spark, body)
 
 
 def q_stream_itemsim_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -3361,20 +2648,10 @@ def q_stream_itemsim_maintenance(spark, sf_dir: str) -> DataFrame:
     filter is derived from the delta itself and is a superset of its
     orders by construction.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.recommend import (
         SIM_MIN_CO,
         SIM_TOP_K,
         cosine_topk_from_counts,
-    )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
     )
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -3382,188 +2659,165 @@ def q_stream_itemsim_maintenance(spark, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("o"),
         F.col("l_partkey").alias("p"),
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_itemsim_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_itemsim_state_")
     # orders per state bucket: coarse enough that a part's directory
     # fan-out stays in the tens-to-hundreds at 100x (file listing is
     # the hidden cost of a partitioned store — a fine-grained layout
     # multiplies every read's discovery work), fine enough that the
     # chunk-boundary probe still skips ~all of the state
     bucket_w = 262144
-    items = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "items",
-        merge_fanout=4,
-        # state rows are (o, ps[], bkt) — each part holds only the
-        # items NEW to that batch for each order, so parts need no
-        # dedup at compaction (read-side probes fold per-order arrays
-        # themselves); repartition-by-bucket consolidates files
-        merge_transform=lambda df: df.repartition("bkt"),
-        partition_col="bkt",
-        count_rows=False,
-    )
-    pairs = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "pairs",
-        merge_fanout=4,
-        merge_transform=lambda df: df.groupBy("a", "b").agg(
-            F.sum("c").alias("c")
-        ),
-        count_rows=False,
-    )
-    margs = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "margs",
-        merge_fanout=4,
-        merge_transform=lambda df: df.groupBy("p").agg(
-            F.sum("c").alias("c")
-        ),
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        # ONE shuffle per batch: group the raw lines into per-order
-        # item-set ARRAYS (collect_set = exact within-batch dedup).
-        # Everything else — replay dedup, cross-batch pair probes,
-        # pair enumeration — happens JVM-side on those arrays, so the
-        # old plan's distinct + anti-join + localCheckpoint chain (two
-        # more full shuffles and a full materialization per batch) is
-        # gone entirely. The order-range probe rides the SAME job that
-        # materializes the persisted arrays (one scan of the delta per
-        # batch, not two).
-        base = (
-            batch_df.select("o", "p")
-            .groupBy("o")
-            .agg(F.collect_set("p").alias("ps"))
-            .persist()
+    def body(twin):
+        items = twin.store(
+            "items",
+            # state rows are (o, ps[], bkt) — each part holds only the
+            # items NEW to that batch for each order, so parts need no
+            # dedup at compaction (read-side probes fold per-order
+            # arrays themselves); repartition-by-bucket consolidates
+            # files
+            lambda df: df.repartition("bkt"),
+            fanout=4,
+            partition_col="bkt",
         )
-        rng = base.agg(
-            F.min("o").alias("lo"), F.max("o").alias("hi")
-        ).collect()[0]
-        old = items.read()
-        if old is not None and rng["lo"] is not None:
-            # the delta's order-range bucket span bounds the state
-            # probe: the bkt filter prunes state DIRECTORIES, the o
-            # range prunes row groups — both are supersets of the
-            # delta's orders, so the join semantics are unchanged
-            boundary = (
-                old.filter(
-                    F.col("bkt").between(
-                        int(rng["lo"]) // bucket_w,
-                        int(rng["hi"]) // bucket_w,
-                    )
-                    & F.col("o").between(int(rng["lo"]), int(rng["hi"]))
-                )
-                # an order's items may sit in several parts (one per
-                # batch that extended it) — fold them per order
+        pairs = twin.store(
+            "pairs",
+            lambda df: df.groupBy("a", "b").agg(F.sum("c").alias("c")),
+            fanout=4,
+        )
+        margs = twin.store(
+            "margs",
+            lambda df: df.groupBy("p").agg(F.sum("c").alias("c")),
+            fanout=4,
+        )
+
+        def upsert(batch_df, batch_id):
+            # ONE shuffle per batch: group the raw lines into per-order
+            # item-set ARRAYS (collect_set = exact within-batch dedup).
+            # Everything else — replay dedup, cross-batch pair probes,
+            # pair enumeration — happens JVM-side on those arrays, so
+            # the old plan's distinct + anti-join + localCheckpoint
+            # chain (two more full shuffles and a full materialization
+            # per batch) is gone entirely. The order-range probe rides
+            # the SAME job that materializes the persisted arrays (one
+            # scan of the delta per batch, not two).
+            base = (
+                batch_df.select("o", "p")
                 .groupBy("o")
-                .agg(F.flatten(F.collect_list("ps")).alias("ps_old"))
+                .agg(F.collect_set("p").alias("ps"))
+                .persist()
             )
-            joined = base.join(boundary, "o", "left")
-        else:
-            joined = base.withColumn(
-                "ps_old", F.lit(None).cast("array<bigint>")
-            )
-        arrs = (
-            joined.select(
-                "o",
-                # replay/cross-batch dedup: only items NOT already in
-                # state count as this batch's delta for their order
-                F.array_except(
-                    "ps", F.coalesce("ps_old", F.array())
-                ).alias("new"),
-                F.coalesce("ps_old", F.array()).alias("olds"),
-            )
-            .filter(F.size("new") > 0)
-            .persist()
-        )
-        # Δpairs = C(new, 2) ∪ (new x old items of the same order) —
-        # enumerated inside array transforms (whole-stage codegen, no
-        # self-join); new ∩ olds = ∅ by construction so no a=b guard
-        pair_arrays = arrs.select(
-            F.explode(
-                F.concat(
-                    F.expr(
-                        "flatten(transform(new, (x, i) -> "
-                        "transform(slice(new, i + 2, size(new)), y -> "
-                        "struct(least(x, y) AS a, greatest(x, y) AS b))))"
-                    ),
-                    F.expr(
-                        "flatten(transform(new, x -> transform(olds, "
-                        "y -> struct(least(x, y) AS a, "
-                        "greatest(x, y) AS b))))"
-                    ),
+            rng = base.agg(
+                F.min("o").alias("lo"), F.max("o").alias("hi")
+            ).collect()[0]
+            old = items.read()
+            if old is not None and rng["lo"] is not None:
+                # the delta's order-range bucket span bounds the state
+                # probe: the bkt filter prunes state DIRECTORIES, the o
+                # range prunes row groups — both are supersets of the
+                # delta's orders, so the join semantics are unchanged
+                boundary = (
+                    old.filter(
+                        F.col("bkt").between(
+                            int(rng["lo"]) // bucket_w,
+                            int(rng["hi"]) // bucket_w,
+                        )
+                        & F.col("o").between(int(rng["lo"]), int(rng["hi"]))
+                    )
+                    # an order's items may sit in several parts (one per
+                    # batch that extended it) — fold them per order
+                    .groupBy("o")
+                    .agg(F.flatten(F.collect_list("ps")).alias("ps_old"))
                 )
-            ).alias("pr")
-        ).select("pr.a", "pr.b")
-        # Materialize the deduped arrays ONCE (count over the cached
-        # relation), then submit the three independent store appends
-        # concurrently (guide §2.6, the v4 twin's pattern): each store
-        # is touched by exactly one thread and every append only reads
-        # the already-cached ``arrs``, so the written relations are
-        # bit-identical while the three small write jobs' tails overlap
-        # instead of paying three job latencies end to end.
-        arrs.count()
-        from concurrent.futures import ThreadPoolExecutor
-
-        tasks = [
-            lambda: pairs.append(
-                pair_arrays.groupBy("a", "b").agg(
-                    F.count(F.lit(1)).alias("c")
+                joined = base.join(boundary, "o", "left")
+            else:
+                joined = base.withColumn(
+                    "ps_old", F.lit(None).cast("array<bigint>")
                 )
-            ),
-            lambda: margs.append(
-                arrs.select(F.explode("new").alias("p"))
-                .groupBy("p")
-                .agg(F.count(F.lit(1)).alias("c"))
-            ),
-            # the per-order array part is small (orders, not items) —
-            # coalesce before the partitioned write so the file fan-out
-            # is (8 x buckets-in-range), not (shuffle-parts x buckets)
-            lambda: items.append(
-                arrs.select(
+            arrs = (
+                joined.select(
                     "o",
-                    F.col("new").alias("ps"),
-                    (F.col("o") / bucket_w).cast("int").alias("bkt"),
-                ).coalesce(8)
-            ),
-        ]
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [pool.submit(t) for t in tasks]:
-                fut.result()
-        arrs.unpersist()
-        base.unpersist()
-
-    try:
-        stream = file_replay_source(
-            spark, li, staging, chunks=4, order_col="rid"
-        )
-        snapshot_sink(stream, upsert)
-        pstate = pairs.read()
-        mstate = margs.read()
-        if pstate is None or mstate is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "item bigint, neighbor bigint, co_count bigint, "
-                "cos_sim double, rank int",
+                    # replay/cross-batch dedup: only items NOT already in
+                    # state count as this batch's delta for their order
+                    F.array_except(
+                        "ps", F.coalesce("ps_old", F.array())
+                    ).alias("new"),
+                    F.coalesce("ps_old", F.array()).alias("olds"),
+                )
+                .filter(F.size("new") > 0)
+                .persist()
             )
+            # Δpairs = C(new, 2) ∪ (new x old items of the same order) —
+            # enumerated inside array transforms (whole-stage codegen,
+            # no self-join); new ∩ olds = ∅ by construction so no a=b
+            # guard
+            pair_arrays = arrs.select(
+                F.explode(
+                    F.concat(
+                        F.expr(
+                            "flatten(transform(new, (x, i) -> "
+                            "transform(slice(new, i + 2, size(new)), y -> "
+                            "struct(least(x, y) AS a, greatest(x, y) AS b))))"
+                        ),
+                        F.expr(
+                            "flatten(transform(new, x -> transform(olds, "
+                            "y -> struct(least(x, y) AS a, "
+                            "greatest(x, y) AS b))))"
+                        ),
+                    )
+                ).alias("pr")
+            ).select("pr.a", "pr.b")
+            # Materialize the deduped arrays ONCE (count over the cached
+            # relation), then submit the three independent store
+            # appends concurrently (guide §2.6, the v4 twin's pattern):
+            # each store is touched by exactly one thread and every
+            # append only reads the already-cached ``arrs``, so the
+            # written relations are bit-identical while the three small
+            # write jobs' tails overlap instead of paying three job
+            # latencies end to end.
+            arrs.count()
+            from concurrent.futures import ThreadPoolExecutor
+
+            tasks = [
+                lambda: pairs.append(
+                    pair_arrays.groupBy("a", "b").agg(
+                        F.count(F.lit(1)).alias("c")
+                    )
+                ),
+                lambda: margs.append(
+                    arrs.select(F.explode("new").alias("p"))
+                    .groupBy("p")
+                    .agg(F.count(F.lit(1)).alias("c"))
+                ),
+                # the per-order array part is small (orders, not items)
+                # — coalesce before the partitioned write so the file
+                # fan-out is (8 x buckets-in-range), not (shuffle-parts
+                # x buckets)
+                lambda: items.append(
+                    arrs.select(
+                        "o",
+                        F.col("new").alias("ps"),
+                        (F.col("o") / bucket_w).cast("int").alias("bkt"),
+                    ).coalesce(8)
+                ),
+            ]
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                for fut in [pool.submit(t) for t in tasks]:
+                    fut.result()
+            arrs.unpersist()
+            base.unpersist()
+
+        twin.sink(twin.replay(li, "rid"), upsert)
         co = (
-            pstate.groupBy("a", "b")
+            pairs.read()
+            .groupBy("a", "b")
             .agg(F.sum("c").alias("co_count"))
             .filter(F.col("co_count") >= SIM_MIN_CO)
         )
-        n = mstate.groupBy("p").agg(F.sum("c").alias("n_orders"))
-        return (
-            cosine_topk_from_counts(co, n, SIM_TOP_K)
-            .orderBy("item", "rank")
-            .localCheckpoint(eager=True)
+        n = margs.read().groupBy("p").agg(F.sum("c").alias("n_orders"))
+        return cosine_topk_from_counts(co, n, SIM_TOP_K).orderBy(
+            "item", "rank"
         )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_psi_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -3581,59 +2835,28 @@ def q_stream_psi_maintenance(spark, sf_dir: str) -> DataFrame:
     ``q_events_psi_drift``'s oracle. This is how a feature store keeps
     its drift dashboards fresh without re-scanning history.
     """
-    import shutil
-    import tempfile
-
     from bigdataminingproject_spark.operators.profiling import (
         fold_psi_counters,
         psi_from_counters,
         psi_value_counters,
     )
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", "value"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_psi_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_psi_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "psi",
-        merge_fanout=2,
-        merge_transform=fold_psi_counters,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(psi_value_counters(batch_df))
+    def body(twin):
+        store = twin.store("psi", fold_psi_counters)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
+        def upsert(batch_df, batch_id):
+            store.append(psi_value_counters(batch_df))
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        return psi_from_counters(fold_psi_counters(store.read())).orderBy(
+            "event_type"
         )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "event_type string, n_ref bigint, n_cur bigint, "
-                "psi double",
-            )
-        return (
-            psi_from_counters(fold_psi_counters(state))
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+    return run_twin(spark, body)
 
 
 def q_stream_chi2_maintenance(spark, sf_dir: str) -> DataFrame:
@@ -3643,64 +2866,28 @@ def q_stream_chi2_maintenance(spark, sf_dir: str) -> DataFrame:
     (``profiling.chi_square``) over the folded live tail, landing on
     ``q_events_chi2``'s oracle. One cell relation can serve every
     information metric (MI, NMI, chi-square, Cramér's V) at once."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as _F
-
     from bigdataminingproject_spark.operators.profiling import (
         chi_square,
         contingency_cells,
         fold_contingency_cells,
     )
     from bigdataminingproject_spark.operators.trends import hour_index
-    from bigdataminingproject_spark.sources.tables import load_table
-    from bigdataminingproject_spark.streaming.replay import (
-        file_replay_source,
-    )
-    from bigdataminingproject_spark.streaming.statestore import (
-        AppendOnlyPartsStore,
-    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts"
     )
-    staging = tempfile.mkdtemp(prefix="q_stream_chi2_src_")
-    state_root = tempfile.mkdtemp(prefix="q_stream_chi2_state_")
-    store = AppendOnlyPartsStore(
-        spark,
-        state_root,
-        "chi2",
-        merge_fanout=2,
-        merge_transform=fold_contingency_cells,
-        count_rows=False,
-    )
 
-    def upsert(batch_df, batch_id):
-        store.append(
-            contingency_cells(
-                batch_df,
-                _F.col("event_type"),
-                hour_index() % _F.lit(24),
-            )
-        )
+    def body(twin):
+        store = twin.store("chi2", fold_contingency_cells)
 
-    try:
-        stream = file_replay_source(
-            spark, ev, staging, chunks=4, order_col="event_id"
-        )
-        snapshot_sink(stream, upsert)
-        state = store.read()
-        if state is None:  # zero-batch stream
-            return spark.createDataFrame(
-                [],
-                "n_rows bigint, chi2 double, dof bigint, "
-                "cramers_v double",
+        def upsert(batch_df, batch_id):
+            store.append(
+                contingency_cells(
+                    batch_df, F.col("event_type"), hour_index() % F.lit(24)
+                )
             )
-        return (
-            chi_square(fold_contingency_cells(state))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
+
+        twin.sink(twin.replay(ev, "event_id"), upsert)
+        return chi_square(fold_contingency_cells(store.read()))
+
+    return run_twin(spark, body)

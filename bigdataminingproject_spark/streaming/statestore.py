@@ -34,10 +34,15 @@ and the cache stays intact for other runs.
 
 Correctness is trivially preserved: parts are disjoint row sets whose
 union IS the state, merging is union-rewrite, and every consumer reads
-through :meth:`read` (multi-path parquet of the current parts). At
-100 TB the same discipline runs with a manifest file instead of an
-in-memory list; the part directories here stand in for object-store
-prefixes.
+through :meth:`read` (multi-path parquet of the current parts).
+
+The part list lives only in memory: no manifest file is written, parts
+carry no micro-batch id, and a restarted query cannot find or resume
+the state a crashed one left. The streaming twins therefore keep their
+stores in a per-run directory that ``streaming/pipeline.py::run_twin``
+removes when the run ends. A crash-consistent store (an atomically
+renamed manifest, batch-id-tagged parts so a replayed batch is a no-op)
+is not built yet.
 """
 
 from __future__ import annotations

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdataminingproject_spark.operators.dedup import connected_components
@@ -37,6 +38,16 @@ def test_cc_long_chain_converges(spark):
     edges = [(i, i + 1) for i in range(9)]
     got = _cc_of(spark, edges)
     assert got == {i: 0 for i in range(10)}
+
+
+def test_cc_unconverged_raises(spark):
+    # a 40-node path needs 39 propagation rounds; 25 must fail loudly
+    # instead of returning the partial labels
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_rounds=25"):
+        connected_components(df, max_rounds=25)
 
 
 def test_cc_separate_components(spark):

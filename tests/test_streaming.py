@@ -3,10 +3,25 @@ compared against the equivalent batch plans."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
+from bigdataminingproject_spark.operators.events import (
+    q_events_decay_score,
+    q_events_hourly,
+    q_events_sessionize,
+)
+from bigdataminingproject_spark.operators.recommend import q_part_itemsim
+from bigdataminingproject_spark.operators.sketches import q_join_size_estimate
+from bigdataminingproject_spark.operators.snapshots import q_doc_snapshots
+from bigdataminingproject_spark.plans.curation import (
+    q_corpus_curation_incremental,
+)
 from bigdataminingproject_spark.sources.tables import load_table
+from bigdataminingproject_spark.streaming import pipeline
 from bigdataminingproject_spark.streaming.pipeline import (
     run_to_memory,
     snapshot_sink,
@@ -939,3 +954,90 @@ def test_cms_mask_down_identity(spark):
     m = {(r["d"], r["bucket"]): r["cnt"] for r in masked.collect()}
     dd = {(r["d"], r["bucket"]): r["cnt"] for r in direct.collect()}
     assert m == dd
+
+
+@pytest.fixture(scope="module")
+def empty_sf(tmp_path_factory, sf_dir):
+    """A zero-row copy of every table in ``sf_dir``, with the same schemas."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf_empty")
+    for name in os.listdir(sf_dir):
+        schema = pq.read_schema(os.path.join(sf_dir, name))
+        pq.write_table(schema.empty_table(), str(out / name))
+    return str(out)
+
+
+def _distinct_user_hours(spark, sf_dir):
+    """The batch answer ``q_stream_dedup`` must emit."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .select("user_id", F.date_trunc("hour", "ts").alias("event_hour"))
+        .distinct()
+        .orderBy("user_id", "event_hour")
+    )
+
+
+# one twin of each scaffold shape, with the batch query it maintains
+_EMPTY_SOURCE_PAIRS = [
+    ("q_stream_decay_maintenance", q_events_decay_score),
+    ("q_stream_curation_maintenance", q_corpus_curation_incremental),
+    ("q_stream_itemsim_maintenance", q_part_itemsim),
+    ("q_stream_join_size_maintenance", q_join_size_estimate),
+    ("q_stream_hourly", q_events_hourly),
+    ("q_stream_hourly_maintenance", q_events_hourly),
+    ("q_stream_sessions", q_events_sessionize),
+    ("q_stream_snapshots", q_doc_snapshots),
+    ("q_stream_dedup", _distinct_user_hours),
+]
+
+
+@pytest.mark.parametrize(
+    "twin,batch", _EMPTY_SOURCE_PAIRS, ids=[t for t, _ in _EMPTY_SOURCE_PAIRS]
+)
+def test_twin_on_empty_source_equals_batch(spark, empty_sf, twin, batch):
+    """On zero-row tables every twin still runs one (empty) micro-batch
+    and publishes what its batch query gives: the same rows and the same
+    column names and types (nullability differs between a parquet round
+    trip and a plan, so it is not compared)."""
+    want = batch(spark, empty_sf)
+    live = getattr(pipeline, twin)(spark, empty_sf)
+    assert [(f.name, f.dataType) for f in live.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert [tuple(r) for r in live.collect()] == [
+        tuple(r) for r in want.collect()
+    ]
+
+
+def test_twin_runner_leaves_no_orphans(
+    spark, sf_dir, tmp_path, monkeypatch, rebind
+):
+    """A store twin, a memory-sink twin and a twin whose upsert raises
+    all leave no directory behind and no memory-sink table registered."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    tables = {t.name for t in spark.catalog.listTables()}
+
+    def leftovers():
+        new_tables = {t.name for t in spark.catalog.listTables()} - tables
+        return sorted(os.listdir(tmp_path)), new_tables
+
+    assert pipeline.q_stream_decay_maintenance(spark, sf_dir).count() > 0
+    assert leftovers() == ([], set())
+    assert pipeline.q_stream_dedup(spark, sf_dir).count() > 0
+    assert leftovers() == ([], set())
+
+    def raising(original):
+        def fail(*args, **kwargs):
+            raise RuntimeError("injected upsert failure")
+
+        return fail
+
+    rebind(
+        "bigdataminingproject_spark.operators.events",
+        "decay_partials",
+        raising,
+    )
+    with pytest.raises(Exception, match="injected upsert failure"):
+        pipeline.q_stream_decay_maintenance(spark, sf_dir)
+    assert leftovers() == ([], set())
